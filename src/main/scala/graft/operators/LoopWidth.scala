@@ -40,14 +40,10 @@ object LoopWidth {
     * 13 stages for a 7.4 s wall), i.e. the opposite failure mode of
     * the round-6 32-wide-kilobyte-frames lesson. Kilobyte frames
     * still get p = 1 (rows/250 k + 1), a 10¹⁰-row graph still caps at
-    * cluster parallelism — only the mid-size regime changes. */
-  val RowsPerTask: Long =
-    // dev-only sweep knob (GRAFT_LOOP_ROWS_PER_TASK): lets a profiling
-    // session A/B the width heuristic without recompiling. Unset —
-    // every production/bench path — this is the measured 250 k
-    // constant (r15 swept 100 k: task CPU ×2, wall flat; r16 re-swept
-    // under the fused rounds, numbers in OPTIMIZATION_r16.md).
-    sys.env.get("GRAFT_LOOP_ROWS_PER_TASK").map(_.toLong).getOrElse(250000L)
+    * cluster parallelism — only the mid-size regime changes. r15
+    * swept 100 k (task CPU ×2, wall flat); r16 re-swept under the
+    * fused rounds (OPTIMIZATION_r16.md). */
+  val RowsPerTask: Long = 250000L
 
   def partitionsFor(rows: Long, spark: SparkSession): Int =
     math.min(

@@ -972,14 +972,16 @@ object TextPack extends QueryPack {
     // engine-exactness discipline: per-type log-probs quantized to
     // 1e-4 long units, per-doc sums exact and order-free.
     "tx_lm_kn_ppl" -> ((s, dir) => {
-      // widened + materialized bigram frame (r16): the whole
-      // split → shingle → explode chain ran as ONE task (the
-      // single-row-group fixture scan; guide §2.2) and the frame is
-      // consumed TWICE (the type-count chain and the per-doc scoring
-      // join), so the one-core chain ran twice — 7.6 s of task time
-      // on one core for a 3.6 s wall. Widen before the explode,
-      // checkpoint after: one 32-wide build, both consumers read
-      // rows. On a lake-scale scan widen is a no-op by its guard.
+      // widened bigram frame (r16): the whole split → shingle →
+      // explode chain ran as ONE task (the single-row-group fixture
+      // scan; guide §2.2) and the frame is consumed TWICE (the
+      // type-count chain and the per-doc scoring join), so the
+      // one-core chain ran twice — 7.6 s of task time on one core for
+      // a 3.6 s wall. Only the widen before the explode shipped, with
+      // no checkpoint: both consumers share the widen's exchange
+      // (exchange reuse) and each re-runs the explode chain above it,
+      // now 32-wide. On a lake-scale scan widen is a no-op by its
+      // guard.
       val toks = Tables.widen(tokenized(s, dir))
       val bg = toks.select(col("doc_id"),
           explode(Hashing.shingles(col("toks"), 2)).as("ng"))

@@ -70,6 +70,8 @@ object CrawlStream {
     import s.implicits._
     val frozen = chrome.select(col("lang"), col("h")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
+    val chromeDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(frozen.toSeq, 1)).toDF("lang", "h")
     spark.readStream.format("binaryFile")
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
@@ -90,32 +92,25 @@ object CrawlStream {
         }
       }
       .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Warc.HttpRecord],
+      .foreachBatch { (micro: org.apache.spark.sql.Dataset[Warc.HttpRecord],
                        batchId: Long) =>
+        val batch = LabelStream.inSession(micro.toDF(), spark)
         val dir = s"$outDir/ingest_batch=$batchId"
         if (!SinkFs.exists(s"$dir/_SUCCESS")) {
-          val sess = batch.sparkSession
-          val chromeDf = sess.createDataFrame(
-            sess.sparkContext.parallelize(frozen.toSeq, 1))
-            .toDF("lang", "h")
-          CrawlText.curatedWithChrome(batch.toDF(), chromeDf)
+          CrawlText.curatedWithChrome(batch, chromeDf)
             .write.mode(SaveMode.Overwrite).parquet(dir)
         }
         exportDir.foreach { ed =>
           val dir2 = s"$ed/ingest_batch=$batchId"
           if (!SinkFs.exists(s"$dir2/_SUCCESS")) {
-            val sess = batch.sparkSession
-            val chromeDf = sess.createDataFrame(
-              sess.sparkContext.parallelize(frozen.toSeq, 1))
-              .toDF("lang", "h")
             val curated = CrawlText
-              .curatedTextWithChrome(batch.toDF(), chromeDf)
-              .join(batch.toDF().select(col("doc_id"), col("source"))
+              .curatedTextWithChrome(batch, chromeDf)
+              .join(batch.select(col("doc_id"), col("source"))
                 .distinct(), Seq("doc_id"))
               .select(col("doc_id"), col("lang"), col("source"),
                 col("xt").as("text"))
             val it = graft.sources.JsonlShards
-              .shardsFromDocuments(curated)(sess).toLocalIterator()
+              .shardsFromDocuments(curated)(spark).toLocalIterator()
             while (it.hasNext) {
               val sh = it.next()
               SinkFs.writeBytes(
@@ -127,11 +122,7 @@ object CrawlStream {
         driftDir.foreach { dd =>
           val drift = s"$dd/ingest_batch=$batchId"
           if (!SinkFs.exists(s"$drift/_SUCCESS")) {
-            val sess = batch.sparkSession
-            val chromeDf = sess.createDataFrame(
-              sess.sparkContext.parallelize(frozen.toSeq, 1))
-              .toDF("lang", "h")
-            CrawlText.boilerplate(CrawlText.paragraphs(batch.toDF()))
+            CrawlText.boilerplate(CrawlText.paragraphs(batch))
               .join(org.apache.spark.sql.functions.broadcast(chromeDf),
                 Seq("lang", "h"), "left_anti")
               .write.mode(SaveMode.Overwrite).parquet(drift)

@@ -84,12 +84,12 @@ object IftStream {
     feed(spark, feedDir).writeStream
       .option("checkpointLocation", ckptDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        val batch = LabelStream.inSession(micro, spark)
         val dir = s"$outDir/sft_batch=$batchId"
-        val sess = batch.sparkSession
         if (SinkFs.exists(s"$dir/_SUCCESS")) {
           if (SinkFs.list(dir).exists(_.getPath.getName.endsWith(".parquet")))
-            seen.commit(storeRespKeys(sess.read.parquet(dir)))
+            seen.commit(storeRespKeys(spark.read.parquet(dir)))
         } else {
           val b = batch.persist()
           try {
@@ -124,7 +124,7 @@ object IftStream {
             // responses are definitely new
             val freshR = seen.filterNew(
               candResp.select(col("rkey")).distinct(),
-              storeRespKeys(admitted(sess, outDir)))
+              storeRespKeys(admitted(spark, outDir)))
             val seenLosers = candResp
               .join(freshR, Seq("rkey"), "left_anti")
               .select(col("conv_id")).distinct()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Merge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -24,6 +24,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * only, chainabuse/main.py:107-109).
   */
 object LabelStream {
+
+  /** A foreachBatch micro-batch rebound to `spark`, the session that
+    * started the query; every foreachBatch body here runs on the
+    * rebound frame.
+    *
+    * Why: each streaming query runs in a session cloned at its start,
+    * the executors run the clone's tasks under a class loader of its
+    * own, and Spark's cache of compiled generated code is keyed by
+    * (class loader, code). So a
+    * tail-follow poller, which starts a new query per poll, ran every
+    * body on cold code and recompiled the same classes on every poll.
+    * Under the caller's session, the body's jobs reuse what earlier
+    * polls compiled.
+    *
+    * The one behaviour difference: the body plans under the caller's
+    * runtime confs as they are when the batch runs, not under the
+    * clone's snapshot of them taken at query start. */
+  def inSession(batch: DataFrame, spark: SparkSession): DataFrame =
+    GraftShim.ofRows(spark, GraftShim.logicalPlan(batch))
 
   /** The reference's 12 h TTL dedup (bitcoinabuse/main.go:43-45) in
     * streaming form: state is bounded by the watermark, so it cannot
@@ -77,7 +96,7 @@ object LabelStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.upsert(batch, batchId)
+        sink.upsert(inSession(batch, source.sparkSession), batchId)
       }
       .start()
 
@@ -96,7 +115,8 @@ object LabelStream {
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        val batch = inSession(micro, source.sparkSession)
         // Replay guard: a batch whose write landed but whose
         // checkpoint commit didn't arrives AGAIN, and the dedup
         // filter would see its own first delivery in the store and

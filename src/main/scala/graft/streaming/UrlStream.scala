@@ -145,6 +145,8 @@ object UrlStream {
     import s.implicits._
     val frozen = chrome.select(col("lang"), col("h")).collect()
       .map(r => (r.getString(0), r.getLong(1)))
+    val chromeDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(frozen.toSeq, 1)).toDF("lang", "h")
     spark.readStream.format("binaryFile")
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
@@ -168,12 +170,12 @@ object UrlStream {
       .writeStream
       .option("checkpointLocation", ckptDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        val batch = LabelStream.inSession(micro, spark)
         val dir = s"$outDir/ingest_batch=$batchId"
-        val sess = batch.sparkSession
         if (SinkFs.exists(s"$dir/_SUCCESS")) {
           if (SinkFs.list(dir).exists(_.getPath.getName.endsWith(".parquet")))
-            seen.commit(sess.read.parquet(dir).select(col("canonical")))
+            seen.commit(spark.read.parquet(dir).select(col("canonical")))
         } else {
           val canon = graft.operators.UrlOps
             .withUrlParts(batch, col("url"))
@@ -188,12 +190,9 @@ object UrlStream {
               .select(col("canonical"), col("m.doc_id").as("doc_id"),
                 col("m.url").as("url"))
             val fresh = seen
-              .filterNew(firsts, admitted(sess, outDir))
+              .filterNew(firsts, admitted(spark, outDir))
               .persist()
             try {
-              val chromeDf = sess.createDataFrame(
-                sess.sparkContext.parallelize(frozen.toSeq, 1))
-                .toDF("lang", "h")
               // admission cut FIRST; only first-crawl bodies parse
               val pages = canon.join(
                 fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -233,7 +232,7 @@ object UrlStream {
               // javascript: anchors resolve absolute and drop here),
               // run through the full canonicalizer, minus everything
               // the store has admitted (this batch included)
-              val batchAdmitted = sess.read.parquet(dir)
+              val batchAdmitted = spark.read.parquet(dir)
                 .select(col("doc_id"), col("canonical").as("base"))
               val hrefs = batch.select(col("doc_id"), col("body"))
                 .join(batchAdmitted, Seq("doc_id"))
@@ -247,7 +246,7 @@ object UrlStream {
               graft.operators.UrlOps.withUrlParts(web, col("url"))
                 .select(col("canonical").as("dst"), col("domain"))
                 .distinct()
-                .join(admitted(sess, outDir)
+                .join(admitted(spark, outDir)
                     .select(col("canonical").as("dst")),
                   Seq("dst"), "left_anti")
                 .write.mode(SaveMode.Overwrite).parquet(dir2)
@@ -268,16 +267,16 @@ object UrlStream {
     canonicalFeed(spark, feedDir).writeStream
       .option("checkpointLocation", ckptDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (micro: DataFrame, batchId: Long) =>
+        val batch = LabelStream.inSession(micro, spark)
         val dir = s"$outDir/ingest_batch=$batchId"
-        val sess = batch.sparkSession
         if (SinkFs.exists(s"$dir/_SUCCESS")) {
           // checkpoint-commit replay: the store has the batch; re-fold
           // its keys (idempotent) so a restarted process stays exact.
           // An all-duplicate batch landed `_SUCCESS` with no part
           // files — nothing to fold, and nothing to schema-infer.
           if (SinkFs.list(dir).exists(_.getPath.getName.endsWith(".parquet")))
-            seen.commit(sess.read.parquet(dir).select(col("canonical")))
+            seen.commit(spark.read.parquet(dir).select(col("canonical")))
         } else {
           // within-batch first-crawl: one survivor per canonical, the
           // min (doc_id, url) struct carrying the first record's url
@@ -286,7 +285,7 @@ object UrlStream {
             .agg(min(struct(col("doc_id"), col("url"))).as("m"))
             .select(col("canonical"), col("m.doc_id").as("doc_id"),
               col("m.url").as("url"))
-          val fresh = seen.filterNew(firsts, admitted(sess, outDir))
+          val fresh = seen.filterNew(firsts, admitted(spark, outDir))
             .persist()
           try {
             // fetched_at: the batch's landing date — the fetch log

@@ -21,6 +21,12 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // as labelbench does: one streaming run of IftStream compiles
+      // about 110 classes (each once on the driver and once on the
+      // executors, under different class loaders), more than the
+      // default cache of 100 holds, so a later run would find none of
+      // its classes cached
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

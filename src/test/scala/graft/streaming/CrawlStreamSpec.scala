@@ -64,8 +64,13 @@ class CrawlStreamSpec extends SparkSpec {
     // gamma's banner is NOT in the wave-1 chrome artifact — it stays
     // in gamma's text until the next artifact refresh, by design.
     land(feed, docs(41 to 52, "gamma"))
-    CrawlStream.startCuration(spark, feed, out, ckpt, chrome, Some(drift))
-      .awaitTermination()
+    val compiled = Compiles.during {
+      CrawlStream.startCuration(spark, feed, out, ckpt, chrome, Some(drift))
+        .awaitTermination()
+    }
+    // the second run's query is a new cloned session, but its body
+    // runs in `spark` and reuses the classes wave 1 compiled
+    assert(compiled == 0, s"wave 2 compiled $compiled classes")
     // ...and the DRIFT MONITOR fires on exactly the new chrome: the
     // gamma banner clears the batch-local df bar (11 non-404 docs),
     // the footer is already frozen, genuine text stays under df

@@ -86,6 +86,35 @@ class IftStreamSpec extends SparkSpec {
         "canned response to the dropped survivor 35")
   }
 
+  test("later intakes of the same shape reuse the compiled classes") {
+    // fresh stores, each fed one clean conv and one canned refusal
+    // (ids 255255 apart keep every residue the synthesis keys on):
+    // the same plans over the same sizes, run by queries whose cloned
+    // sessions differ
+    def intake(ids: Seq[Long]): (Set[Long], Long) = {
+      val dir = Files.createTempDirectory("graft-ift4").toString
+      val feed = s"$dir/feed"; val out = s"$dir/sft"
+      docsDf(ids).coalesce(1).write.mode("append").parquet(feed)
+      val seen = new BloomSeenSet("rkey", expectedKeys = 1000)
+      val compiled = Compiles.during {
+        IftStream.startIntake(spark, feed, out, s"$dir/ckpt", seen,
+          Seq(IftPack.Template)).awaitTermination()
+      }
+      (admittedIds(out), compiled)
+    }
+    val k = 255255L
+    val runs = (0 to 3).map(j => intake(Seq(1L + j * k, 5L + j * k)))
+    runs.zipWithIndex.foreach { case ((ids, _), j) =>
+      assert(ids == Set(1L + j * k, 5L + j * k)) }
+    // Run in the queries' cloned sessions, each later intake would
+    // compile about 60 classes again. In `spark` it compiles a few, not
+    // 0: adaptive execution numbers codegen stages in the order stages
+    // finish, and a stage that comes back under another number
+    // compiles again.
+    val later = runs.drop(1).map(_._2)
+    assert(later.sum < 90, s"later intakes compiled $later classes")
+  }
+
   test("the landed rows reproduce their response keys (store needs no key column)") {
     val dir = Files.createTempDirectory("graft-ift2").toString
     val feed = s"$dir/feed"; val out = s"$dir/sft"

@@ -76,8 +76,13 @@ class UrlStreamSpec extends SparkSpec {
       rec(7, Some("https://example.com/p/4"))))
     val seen2 = new BloomSeenSet("canonical", expectedKeys = 1000,
       persistPath = Some(sketch))
-    UrlStream.startAdmission(spark, feed, out, ckpt, seen2)
-      .awaitTermination()
+    val compiled = Compiles.during {
+      UrlStream.startAdmission(spark, feed, out, ckpt, seen2)
+        .awaitTermination()
+    }
+    // wave 3 has wave 2's shape: its body, run in `spark`, reuses the
+    // classes wave 2 compiled
+    assert(compiled == 0, s"wave 3 compiled $compiled classes")
     val w3 = UrlStream.admitted(spark, out).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(w3 == w2 + (("https://example.com/p/4", 7L)),
