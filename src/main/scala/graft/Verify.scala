@@ -17,8 +17,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *
   * Wall time: queries run [[Threads]]-wide on the shared session
   * (Spark's scheduler handles concurrent jobs; every query's output
-  * dir is its own, the artifact memos are computeIfAbsent-guarded,
-  * and iterative loops already isolate their width on a child
+  * dir is its own, shared artifacts go through IndexCache, whose
+  * per-key monitor builds each one once however many queries ask for
+  * it, and iterative loops already isolate their width on a child
   * session — LoopWidth scaladoc). Parallelism changes only wall
   * time, never results: each query's plan and output are
   * self-contained. GRAFT_VERIFY_THREADS=1 restores the serial walk.

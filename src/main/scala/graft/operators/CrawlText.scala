@@ -158,13 +158,6 @@ object CrawlText {
       .filter(size(split(col("xt"), "\\s+")) >= MinWords)
   }
 
-  /** The chrome artifact for `dir`'s fixture crawl, learned ONCE per
-    * corpus per process through [[IndexCache]] (the centroid
-    * accounting): every crawl consumer — extraction, the audit
-    * inventory, the dedup composition — reads the memo instead of
-    * re-running the paragraph-df pass. The collect is the
-    * centroid-collect class (chrome is the handful of repeated
-    * paragraphs, never the corpus). */
   /** The curated corpus (doc_id, lang, xt) for `dir`'s fixture
     * crawl — archives spooled from `documents`, parsed, extracted
     * against the memoized chrome artifact. The ONE engine-side
@@ -172,45 +165,26 @@ object CrawlText {
     * ds_crawl_dedup, sp_corpus_e2e) build on, mirroring
     * [[sqlCuratedSrc]] on the oracle side.
     *
-    * Memoized per corpus dir and persisted through the
-    * [[IndexCache.frame]] parquet envelope (the link-graph artifact
-    * accounting, LinkOps.edgeArtifact): extraction IS the corpus
+    * An [[IndexCache.frameArtifact]], persisted through the parquet
+    * envelope when a persist root is set: extraction IS the corpus
     * build a production pipeline writes exactly once — CCNet ships
     * the extracted corpus as a table and every downstream stage
-    * (dedup, tokenization, audit) reads it. In-process consumers
-    * share one checkpoint-backed frame (first-consumer-pays); across
-    * processes the artifact is a distributed parquet scan. A query
-    * that consumes the corpus twice (ds_crawl_dedup's LSH leg + its
-    * survivor anti-join) reads the materialization, not the
-    * Warc-parse chain, twice. Construction is deterministic, so memo,
-    * persisted table, and in-query build are value-identical and
-    * every oracle replays unchanged. Cached frames are validated
-    * against their owning session (the graphMemo discipline): a
-    * stopped session's checkpoint blocks are gone — rebuilt, never
-    * served. */
-  def curatedFor(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val cached = curatedMemo.get(dir)
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-    else curatedLocks.computeIfAbsent(dir, _ => new Object).synchronized {
-      val again = curatedMemo.get(dir)
-      if (again != null && !again.sparkSession.sparkContext.isStopped) again
-      else {
-        val built = IndexCache.frame(s, "curated", dir) {
-          implicit val sp: org.apache.spark.sql.SparkSession = s
-          // widened: archive synthesis + WARC/HTTP parse + paragraph
-          // extraction is the per-row-dense chain the single-split
-          // fixture scan serializes
-          curatedTextWithChrome(
-            graft.sources.Warc.parseHttpRecords(
-              graft.sources.Warc.htmlResponseArchives(
-                graft.Tables.widen(graft.Tables.documents(s, dir)))).toDF(),
-            chromeFor(s, dir))
-        }
-        curatedMemo.put(dir, built)
-        built
-      }
+    * (dedup, tokenization, audit) reads it. A query that consumes the
+    * corpus twice (ds_crawl_dedup's LSH leg + its survivor
+    * anti-join) reads the materialization, not the Warc-parse chain,
+    * twice. */
+  def curatedFor(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    IndexCache.frameArtifact(s, "curated", dir) {
+      implicit val sp: org.apache.spark.sql.SparkSession = s
+      // widened: archive synthesis + WARC/HTTP parse + paragraph
+      // extraction is the per-row-dense chain the single-split
+      // fixture scan serializes
+      curatedTextWithChrome(
+        graft.sources.Warc.parseHttpRecords(
+          graft.sources.Warc.htmlResponseArchives(
+            graft.Tables.widen(graft.Tables.documents(s, dir)))).toDF(),
+        chromeFor(s, dir))
     }
-  }
 
   /** [[curatedFor]] reduced to the fingerprint surface (doc_id, lang,
     * n_chars, text_md5) — tx_crawl_text_e2e's shape, off the shared
@@ -251,28 +225,14 @@ object CrawlText {
     * aggregation), and the per-language inventory then refines the
     * REMOVAL under predicted keys.
     *
-    * Same [[IndexCache.frame]] artifact discipline as [[curatedFor]]
-    * — extraction is paid once per corpus per process, downstream
-    * consumers scan the materialization. */
+    * An [[IndexCache.frameArtifact]] like [[curatedFor]]. */
   def predictedCuratedFor(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val key = "p:" + dir
-    val cached = curatedMemo.get(key)
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-    else curatedLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val again = curatedMemo.get(key)
-      if (again != null && !again.sparkSession.sparkContext.isStopped) again
-      else {
-        val built = IndexCache.frame(s, "curatedp", dir) {
-          implicit val sp: org.apache.spark.sql.SparkSession = s
-          predictedCuratedOver(graft.Tables.documents(s, dir),
-            TextPack.modelFor(s, dir))
-        }
-        curatedMemo.put(key, built)
-        built
-      }
+      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    IndexCache.frameArtifact(s, "curatedp", dir) {
+      implicit val sp: org.apache.spark.sql.SparkSession = s
+      predictedCuratedOver(graft.Tables.documents(s, dir),
+        TextPack.modelFor(s, dir))
     }
-  }
 
   /** The predicted-language curation CHAIN over any documents frame
     * and an already-trained langid model — [[predictedCuratedFor]]'s
@@ -314,11 +274,11 @@ object CrawlText {
       boilerplate(keyed).select(col("lang"), col("h")))
   }
 
-  private val curatedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val curatedLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
+  /** The chrome artifact for `dir`'s fixture crawl, an
+    * [[IndexCache]] artifact read by every crawl consumer —
+    * extraction, the audit inventory, the dedup composition. The
+    * collect is the centroid-collect class (chrome is the handful of
+    * repeated paragraphs, never the corpus). */
   def chromeFor(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     implicit val sp: org.apache.spark.sql.SparkSession = s
     val rows = IndexCache.chromeInventory(dir) {

@@ -225,17 +225,13 @@ object IftPack extends QueryPack {
   def sftFeed(docs: DataFrame): DataFrame =
     sftFeedOver(docs, curated(docs).select(col("conv_id")))
 
-  /** Process-lifetime memo of the curated-conversation table per
-    * corpus dir — the curation chain (gates, template drop, dup-
-    * response dedup, scrub accounting) is ONE artifact that both the
-    * e2e query and the packed SFT feed consume; each was re-running
-    * the whole chain. */
-  private val curatedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The curated-conversation table as an [[IndexCache]] artifact —
+    * the curation chain (gates, template drop, dup-response dedup,
+    * scrub accounting) that both the e2e query and the packed SFT
+    * feed consume. */
   private def curatedFor(s: SparkSession, dir: String): DataFrame =
-    curatedMemo.computeIfAbsent(dir,
-      _ => curated(Tables.documents(s, dir)).localCheckpoint(eager = true))
+    IndexCache.artifact(s, "iftcurated", dir)(
+      curated(Tables.documents(s, dir)).localCheckpoint(eager = true))
 
   /** [[sftFeed]] over a prepared curated conv-id frame. */
   def sftFeedOver(docs: DataFrame, curatedIds: DataFrame): DataFrame = {

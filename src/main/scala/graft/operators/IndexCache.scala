@@ -1,34 +1,77 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Build-once-reuse for trained vector-index artifacts — the
-  * production shape of a search/curation fleet: centroids and PQ
-  * codebooks are trained by ONE offline job and every consumer
-  * (assignment, SemDeDup, ADC search, sampling strata) reuses the
-  * broadcast artifact instead of re-running Lloyd's. Here that is a
-  * process-lifetime memo keyed by corpus dir.
+/** The one memo for shared artifacts — trained indexes and models,
+  * and the corpus-scale frames several queries read (signature and
+  * band tables, k-NN graphs, the curated crawl corpus, ...). Each
+  * artifact is built once per (kind, corpus dir) and every consumer
+  * reads the memo: the production shape, where an offline job
+  * writes an index once and every consumer reuses it.
   *
-  * Correctness is unaffected by construction: training is fully
-  * deterministic (integer-quantized order-free sums, fixed
-  * lowest-vec_id init — KMeans scaladoc), so the memoized artifact is
-  * bit-identical to what an in-query training would produce, and the
-  * DuckDB oracles replay the SAME unrolled training regardless of
-  * which query triggered the build. The corpus at a dir is immutable
-  * test data; a mutated corpus needs a new dir or [[clear]].
+  * Correctness is unaffected by construction: every build is
+  * deterministic (integer-quantized order-free sums, fixed inits,
+  * checkpointed frames of a deterministic plan), so a memoized
+  * artifact is bit-identical to what an in-query build would produce,
+  * and the DuckDB oracles replay the SAME unrolled build regardless of
+  * which query triggered it. The corpus at a dir is immutable test
+  * data; a mutated corpus needs a new dir or [[clear]].
   *
   * Bench note: per-query wall times become order-dependent — the
-  * first consumer in a pass pays the training scan, later ones read
-  * the memo. That is the intended accounting (one training per pass,
-  * as in production), replacing the earlier per-query self-contained
-  * trade.
+  * first consumer in a pass pays the build, later ones read the memo.
+  * That is the intended accounting (one build per pass, as in
+  * production).
+  *
+  * Mechanism: one slot per (kind, dir) key whose monitor serializes
+  * that key's build, so concurrent callers (Verify runs queries
+  * several wide) never build one key twice. Builds NEST — pairs read
+  * signatures, a crawl cycle's edges read the dir's edges, predicted
+  * curation reads the langid model — which `computeIfAbsent` forbids
+  * within one map; per-key monitors allow it, and nesting follows the
+  * artifact DAG, so the lock order is acyclic. A build that throws
+  * caches nothing. An artifact built through a session records that
+  * session's SparkContext and is served only to callers of the same,
+  * live context: a frame whose checkpoint blocks died with a stopped
+  * context is rebuilt, never served, and the new entry replaces the
+  * old one. Sessionless artifacts (the PSL table, tokenizer tables,
+  * classifier weights, the chrome inventory) live for the process.
   */
 object IndexCache {
 
+  /** A key's monitor and its current entry: the value and the
+    * SparkContext that built it (null for sessionless artifacts). */
+  private final class Slot {
+    @volatile var entry: (SparkContext, Any) = _
+  }
+
   private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[String, Slot]()
+
+  private def memoized[T](kind: String, dir: String,
+      sc: SparkContext)(build: => T): T = {
+    val slot = memo.computeIfAbsent(s"$kind:$dir", _ => new Slot)
+    def live: Option[Any] = slot.entry match {
+      case (owner, v) if (owner eq sc) && (sc == null || !sc.isStopped) =>
+        Some(v)
+      case _ => None
+    }
+    live.getOrElse(slot.synchronized {
+      live.getOrElse {
+        val v = build
+        slot.entry = (sc, v)
+        v
+      }
+    }).asInstanceOf[T]
+  }
+
+  /** The artifact `kind` over `dir`, built in `s` on first use and
+    * bound to `s`'s SparkContext. */
+  def artifact[T](s: SparkSession, kind: String, dir: String)
+                 (build: => T): T =
+    memoized(kind, dir, s.sparkContext)(build)
 
   /** Envelope format version (layout of the header below). */
   val FormatVersion = 1
@@ -141,24 +184,25 @@ object IndexCache {
     } finally in.close()
   }
 
-  private def cached[T <: AnyRef](key: String)(build: => T): T = {
-    val kind = key.takeWhile(_ != ':')
-    val dir = key.dropWhile(_ != ':').drop(1)
-    memo.computeIfAbsent(key, _ =>
+  /** An envelope artifact: memoized, and with a persist root loaded
+    * from (or saved to) its versioned envelope. */
+  private def trained[T <: AnyRef](kind: String, dir: String,
+      sc: SparkContext)(build: => T): T =
+    memoized(kind, dir, sc) {
       persistDir.flatMap(root => load[T](root, kind, dir)).getOrElse {
         val v = build
         builds.incrementAndGet()
         persistDir.foreach(root => save(root, kind, dir, v))
         v
-      }).asInstanceOf[T]
-  }
+      }
+    }
 
   /** Full-vector Lloyd centroids (2 steps, k = [[KMeans.K]]) over the
     * quantized embeddings of `dir` — the artifact sim_kmeans_assign /
     * ds_semantic_dedup / sp_cluster_sample / sp_contrastive_triplets
     * all consume. */
   def centroids(s: SparkSession, dir: String): Seq[Array[Double]] =
-    cached(s"cent:$dir") {
+    trained("cent", dir, s.sparkContext) {
       KMeans.train(KMeans.quantize(Tables.embeddings(s, dir)), iters = 2)
     }
 
@@ -168,7 +212,7 @@ object IndexCache {
     * quantized frame is cached across the 4 trainings' 12 jobs and
     * released before returning. */
   def pqCodebooks(s: SparkSession, dir: String): Seq[Seq[Array[Double]]] =
-    cached(s"pq:$dir") {
+    trained("pq", dir, s.sparkContext) {
       val vq = KMeans.quantize(Tables.embeddings(s, dir)).persist()
       try (0 until SimilarityPack.PqBlocks).map { m =>
         KMeans.train(vq.select(col("vec_id"),
@@ -184,7 +228,7 @@ object IndexCache {
     * EVERY consumer branch of the plan (Spark does not materialize
     * common subplans), re-scanning the corpus once per branch. */
   def sq8Cuts(s: SparkSession, dir: String): (Array[Double], Array[Double]) =
-    cached(s"sq8:$dir") {
+    trained("sq8", dir, s.sparkContext) {
       val rows = Tables.embeddings(s, dir)
         .filter(col("embedding").isNotNull)
         .select(posexplode(col("embedding")).as(Seq("d", "x")))
@@ -200,7 +244,7 @@ object IndexCache {
     * sim_pca_power / sim_pca_project / sim_pca_drift /
     * sim_index_e2e. */
   def pcaVectors(s: SparkSession, dir: String): Seq[Array[Long]] =
-    cached(s"pca:$dir") {
+    trained("pca", dir, s.sparkContext) {
       val cells = Pca.gramUpper(
           Tables.embeddings(s, dir).filter(col("embedding").isNotNull))
         .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
@@ -210,47 +254,39 @@ object IndexCache {
 
   /** The trained quality-classifier model over `dir`'s documents
     * (weak labels + K GD steps, [[Classifier]]) — shared by
-    * tx_classifier_train and tx_classifier_score exactly like the
-    * centroid artifact: one training per process per corpus, every
-    * consumer reads the 65-long memo. Deterministic by the same
-    * argument (fixed-point exact loop), so the oracles replay the
-    * identical unrolled training whichever query triggers the build.
-    * `build` is caller-supplied because the label function lives
-    * with the query pack (TextPack wires its quality-bar labels). */
+    * tx_classifier_train and tx_classifier_score. `build` is
+    * caller-supplied because the label function lives with the query
+    * pack (TextPack wires its quality-bar labels). */
   def classifierModel(dir: String)(build: => Classifier.Model)
       : Classifier.Model =
-    cached(s"clf:$dir")(build)
+    trained("clf", dir, null)(build)
 
   /** Trained tokenizer artifacts — BPE merge table, WordPiece vocab,
-    * unigram model — one training per corpus per process, exactly
-    * the classifier/centroid accounting: vocab/segment/encode/
-    * bake-off consumers all read the memo (tables of ≤ K rows),
-    * whichever query triggers the build. Deterministic by each
-    * family's fixed-point/integer training contract, so the oracles
-    * replay the identical unrolled training regardless of build
-    * order. `build` is caller-supplied: the word tokenization lives
-    * with the query pack. */
+    * unigram model (tables of ≤ K rows) — shared by the vocab /
+    * segment / encode / bake-off consumers. `build` is
+    * caller-supplied: the word tokenization lives with the query
+    * pack. */
   def bpeMerges(dir: String)(build: => Seq[Bpe.Merge]): Seq[Bpe.Merge] =
-    cached(s"bpe:$dir")(build)
+    trained("bpe", dir, null)(build)
 
   /** Byte-level BPE merge table (over GPT-2 byte-remapped pretokens
     * with the Ġ space marker) — distinct artifact from the char-level
     * table: the alphabets differ, so the merges do too. */
   def bpeByteMerges(dir: String)(build: => Seq[Bpe.Merge]): Seq[Bpe.Merge] =
-    cached(s"bpeb:$dir")(build)
+    trained("bpeb", dir, null)(build)
 
   def wordpieceVocab(dir: String)(build: => Seq[(String, Long)]): Seq[(String, Long)] =
-    cached(s"wp:$dir")(build)
+    trained("wp", dir, null)(build)
 
   /** The crawl-chrome inventory (lang, h, para, df) — per-language
     * (trainer v2), a handful of rows by construction (per-source
     * banners + the global footer, once per language); see
     * [[CrawlText.chromeFor]]. */
   def chromeInventory(dir: String)(build: => Seq[(String, Long, String, Long)]): Seq[(String, Long, String, Long)] =
-    cached(s"chrome:$dir")(build)
+    trained("chrome", dir, null)(build)
 
   def unigramModel(dir: String)(build: => Unigram.Trained): Unigram.Trained =
-    cached(s"uni:$dir")(build)
+    trained("uni", dir, null)(build)
 
   /** The public-suffix rule table ([[PublicSuffix]]) — NOT corpus-
     * derived (key "bundled" names the artifact source, not a data
@@ -260,7 +296,7 @@ object IndexCache {
     * checked, atomically replaced — instead of shipping a code
     * change. */
   def pslRules(build: => PublicSuffix.Rules): PublicSuffix.Rules =
-    cached("psl:bundled")(build)
+    trained("psl", "bundled", null)(build)
 
   /** Publish a PSL rule table into the envelope ([[graft.PslConvert]]
     * — the "fetch the full list once, every session loads it" path).
@@ -383,6 +419,11 @@ object IndexCache {
         }
       }
   }
+
+  /** A memoized [[frame]] artifact, bound to `s`'s SparkContext. */
+  def frameArtifact(s: SparkSession, kind: String, key: String)
+                   (build: => DataFrame): DataFrame =
+    artifact(s, kind, key)(frame(s, kind, key)(build))
 
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

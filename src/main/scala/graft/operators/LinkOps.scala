@@ -140,70 +140,28 @@ object LinkOps {
     regexp_replace(s1, "/(?!\\.\\./)[^/]+/\\.\\.(/|$)", "/")
   }
 
-  /** Process-lifetime memo of the built link graph per key — the
-    * crawl-cycle EDGE ARTIFACT (the knnGraph/IndexCache accounting
-    * applied to discovery): wc_link_graph, wc_link_rank, wc_frontier,
-    * wc_discovery, and wc_frontier_incr all read the same built
-    * table instead of each re-running extraction + RFC 3986
-    * resolution + canonicalization + distinct (measured: the edge
-    * build dominates wc_link_rank's first touch). Across PROCESSES
-    * the artifact rides [[IndexCache.frame]] when a persist root is
-    * set — the crawl snapshot's written edge table, which is what
-    * makes the incremental cycle's cost |new pages| instead of
-    * |corpus| on the second and every later run. Construction is
-    * deterministic, so memo and persisted table are bit-identical to
-    * an in-query build and every oracle replays the same href
-    * formulas whichever consumer triggers it; bench accounting
-    * becomes first-consumer-pays. Cached frames are validated
-    * against their owning session: a stopped session's checkpoint
-    * blocks are gone, so serving its frame to a new session (multi-
-    * suite tests) would die downstream — rebuilt instead. */
-  private val graphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The memoized (src, dst) edge frame for a corpus key (`canon` is
-    * only evaluated on a building call). */
+    * only evaluated on a building call) — the crawl-cycle EDGE
+    * ARTIFACT read by wc_link_graph, wc_link_rank, wc_frontier,
+    * wc_discovery, and wc_frontier_incr. */
   def linkGraphFor(key: String, canon: => DataFrame): DataFrame =
     edgeArtifact(key)(linkGraph(canon))
 
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def liveFrame(df: DataFrame): Boolean =
-    df != null && !df.sparkSession.sparkContext.isStopped
-
-  /** Memo/persist for an ARBITRARY deterministic edge-frame build —
-    * the general form of [[linkGraphFor]]: the incremental cycle
-    * registers its MERGED snapshot (previous artifact ∪ new-page
-    * extraction) here, so the extraction cost is paid once per cycle
-    * (the artifact WRITE) and every later consumer — including the
-    * next cycle — reads it, in-process via the memo and across
-    * processes via the [[IndexCache.frame]] parquet envelope.
-    * Per-key monitors rather than computeIfAbsent: a cycle build
-    * NESTS a [[linkGraphFor]] read of the dir artifact, which
-    * ConcurrentHashMap.compute forbids as a recursive update;
-    * nesting only ever goes cycle-key → dir-key, so the lock order
-    * is acyclic. */
-  def edgeArtifact(key: String)(build: => DataFrame): DataFrame = {
-    val cached = graphMemo.get(key)
-    if (liveFrame(cached)) cached
-    else buildLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val again = graphMemo.get(key)
-      if (liveFrame(again)) again
-      else {
-        // the session comes from the thread, NOT from evaluating
-        // `build` — the incremental cycle's build block runs eager
-        // actions (checkpoints, counts, bloom construction), and
-        // forcing it just to learn the session would re-pay the full
-        // first-touch cost in every process that holds a perfectly
-        // valid persisted artifact
-        val built = IndexCache.frame(
-          org.apache.spark.sql.SparkSession.active, "edges", key)(build)
-        graphMemo.put(key, built)
-        built
-      }
-    }
-  }
+  /** An [[IndexCache.frameArtifact]] of kind "edges" for an ARBITRARY
+    * deterministic edge-frame build — the general form of
+    * [[linkGraphFor]]: the incremental cycle registers its MERGED
+    * snapshot (previous artifact ∪ new-page extraction) here, so the
+    * extraction cost is paid once per cycle (the artifact WRITE) and
+    * every later consumer — including the next cycle — reads it. A
+    * cycle build nests a [[linkGraphFor]] read of the dir artifact.
+    * The session comes from the thread, NOT from evaluating `build`
+    * — the incremental cycle's build block runs eager actions
+    * (checkpoints, counts, bloom construction), and forcing it just
+    * to learn the session would re-pay the full first-touch cost in
+    * every process that holds a perfectly valid persisted artifact. */
+  def edgeArtifact(key: String)(build: => DataFrame): DataFrame =
+    IndexCache.frameArtifact(
+      org.apache.spark.sql.SparkSession.active, "edges", key)(build)
 
   /** (src, dst) canonical link edges: extract, resolve, run the
     * TARGET through the same canonicalizer as crawled URLs, drop

@@ -420,21 +420,12 @@ object MultimodalPack extends QueryPack {
     })
   )
 
-  /** (snd_id, fp) over the near-dup audio fixture. */
-  /** Process-lifetime memos of the decoded fingerprint frames and
-    * their dup pairs/groups per corpus dir — the DedupPack
-    * pairsFor/groupsFor accounting at media grain: five dhash
-    * consumers (hash table, dup pairs, apply, pair curation, recall
-    * probe) and two audio consumers each re-ran the full decode +
-    * perceptual-hash chain (and two re-ran the iterative components
-    * loop). Decode and hashing are deterministic, so each memo is
-    * bit-identical to an in-query build; the oracles replay the
-    * fixture arithmetic regardless of consumer. */
-  private val mediaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** (snd_id, fp) over the near-dup audio fixture. The decoded
+    * fingerprint frames and their dup pairs/groups are [[IndexCache]]
+    * artifacts, read by five dhash consumers (hash table, dup pairs,
+    * apply, pair curation, recall probe) and two audio consumers. */
   private def audioFped(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#afp", { _ =>
+    IndexCache.artifact(s, "audiofp", dir) {
       implicit val sp: SparkSession = s
       Multimodal.windowEnergies(Multimodal.decodePcm16(
           Multimodal.syntheticNearDupAudio(
@@ -442,23 +433,23 @@ object MultimodalPack extends QueryPack {
         .select(col("snd_id"),
           PerceptualHash.audioFp(col("energies")).as("fp"))
         .localCheckpoint(eager = true)
-    })
+    }
 
   /** (img_id, dhash) over the near-dup image fixture — the shared
     * head of the perceptual-hash queries, memoized per corpus. */
   private[graft] def dhashed(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dh",
-      _ => dhashOf(s, Tables.documents(s, dir)).localCheckpoint(eager = true))
+    IndexCache.artifact(s, "dhash", dir)(
+      dhashOf(s, Tables.documents(s, dir)).localCheckpoint(eager = true))
 
   /** The image dup-pair index and its components — shared by
     * mm_dhash_dups / mm_dhash_apply / mm_pair_dedup. */
   private def dhashPairsFor(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dhp",
-      _ => dhashDups(dhashed(s, dir)).localCheckpoint(eager = true))
+    IndexCache.artifact(s, "dhashpairs", dir)(
+      dhashDups(dhashed(s, dir)).localCheckpoint(eager = true))
 
   private def dhashGroupsFor(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dhg",
-      _ => Components.connectedComponents(
+    IndexCache.artifact(s, "dhashgroups", dir)(
+      Components.connectedComponents(
           dhashPairsFor(s, dir).select(col("img_a"), col("img_b")),
           "img_a", "img_b")
         .localCheckpoint(eager = true))

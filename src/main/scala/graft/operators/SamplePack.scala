@@ -158,14 +158,11 @@ object SamplePack extends QueryPack {
     * to 1e-4 long units (the tx_lm_perplexity discipline), so the
     * per-doc sums are exact and order-free. Returns (doc_id, n_feats,
     * lwu) with lwu in 1e-4 units. */
-  private val dsirMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def dsirScored(s: SparkSession, dir: String): DataFrame =
-    // per-dir memo: the weights and the Gumbel-sample queries consume
-    // the same trained importance model (the bigramEntropy accounting)
-    dsirMemo.computeIfAbsent(dir,
-      _ => dsirScoredOf(s, dir).localCheckpoint(eager = true))
+    // an IndexCache artifact: the weights and the Gumbel-sample
+    // queries consume the same trained importance model
+    IndexCache.artifact(s, "dsir", dir)(
+      dsirScoredOf(s, dir).localCheckpoint(eager = true))
 
   private def dsirScoredOf(s: SparkSession, dir: String): DataFrame = {
     val B = DsirBuckets
@@ -912,13 +909,10 @@ object SamplePack extends QueryPack {
     * Σ per-doc cross-entropy units) — cross_entropy is already
     * dround4'd, so floor(ce·1e4+0.5) is an exact integer roundtrip
     * on both engines. */
-  private val domMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Doremi.Dom]]()
-
   private def domLosses(s: SparkSession, dir: String): Seq[Doremi.Dom] =
-    // |domains|-row driver artifact, memoized per corpus dir: three
-    // DoReMi-family queries consume it (weights, sample, mix-compare)
-    domMemo.computeIfAbsent(dir, _ =>
+    // |domains|-row driver artifact in IndexCache: three DoReMi-family
+    // queries consume it (weights, sample, mix-compare)
+    IndexCache.artifact(s, "doremidoms", dir)(
       domLossFrame(TextPack.bigramEntropy(s, dir),
         Tables.documents(s, dir))
         .collect().toSeq
@@ -961,34 +955,20 @@ object SamplePack extends QueryPack {
     * residency is three SMALL post-gate frames (the curated corpus
     * and two shrinking survivor sets), not unbounded growth, and a
     * production run replaces them with real lake-table writes. */
-  /** Bounded memo of the curated corpus per (session, corpus dir) —
-    * the production accounting: the pipeline computes the surviving
-    * corpus ONCE and derives both artifacts (manifest + export) from
-    * it. The value is checkpoint-backed ([[corpusCurated]]'s stages
-    * already localCheckpoint), so the memo holds small plans, not
-    * live caches. */
-  private val curatedMemo =
-    new java.util.LinkedHashMap[String, DataFrame]()
-
+  /** The surviving corpus as an [[IndexCache]] artifact: the pipeline
+    * computes it ONCE and derives both artifacts (manifest + export)
+    * from it. The value is checkpoint-backed ([[corpusCurated]]'s
+    * stages already localCheckpoint), so the memo holds small plans,
+    * not live caches. */
   private[graft] def corpusCuratedFor(s: SparkSession, dir: String): DataFrame =
-    curatedMemo.synchronized {
-      val key = System.identityHashCode(s) + "|" + dir
-      Option(curatedMemo.get(key)).getOrElse {
-        val cur = corpusCurated(s,
-          docs = Tables.documents(s, dir),
-          emb = Tables.embeddings(s, dir),
-          chrome = CrawlText.chromeFor(s, dir),
-          model = TextPack.classifierModelFor(s, dir),
-          preCurated = Some(CrawlText.curatedFor(s, dir)))
-          .localCheckpoint(true)
-        curatedMemo.put(key, cur)
-        if (curatedMemo.size > 2) {
-          val it = curatedMemo.entrySet().iterator()
-          it.next(); it.remove()
-        }
-        cur
-      }
-    }
+    IndexCache.artifact(s, "corpuscurated", dir)(
+      corpusCurated(s,
+        docs = Tables.documents(s, dir),
+        emb = Tables.embeddings(s, dir),
+        chrome = CrawlText.chromeFor(s, dir),
+        model = TextPack.classifierModelFor(s, dir),
+        preCurated = Some(CrawlText.curatedFor(s, dir)))
+        .localCheckpoint(true))
 
   /** The corpus-assembly pipeline up to its LAST doc-grain stage —
     * crawl → extract → quality gates → exact+near dedup → semantic

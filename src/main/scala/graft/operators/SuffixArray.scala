@@ -136,56 +136,41 @@ object SuffixArray {
     df
   }
 
-  /** Bounded memo of persisted rank frames (the [[GlobalIndex]]
-    * cache discipline): both registered queries — and repeated
-    * Verify/Bench calls — reuse one materialized doubling chain per
-    * (session, corpus) instead of re-running the doubling chain per
-    * consumer. Evicted frames stay CORRECT (lineage recomputes
-    * from shuffle files); they just lose the cache. */
-  private val cached =
-    new java.util.LinkedHashMap[String, (DataFrame, DataFrame)]()
-  private val MaxCached = 2
-
-  private def builtFor(docs: DataFrame, key: String): (DataFrame, DataFrame) =
-    cached.synchronized {
-      Option(cached.get(key)).getOrElse {
-        // NARROW projection before the persist: consumers only need
-        // the SA key — caching the full doubling frame (every rk_k +
-        // the token column) cost 4.7 s in columnar cache build at
-        // sf0.1 vs 0.8 s for the whole doubling chain itself
-        // (measured; the wide cache was the dominant construction
-        // cost, not the 17 window stages).
-        val r = ranked(positions(docs))
-          .select(col("shard"), col("gpos"), col("doc_id"), col("pos"),
-            col("sent"), col(s"rk$K"))
+  /** The persisted rank and pair frames as an [[IndexCache]]
+    * artifact: both registered queries — and repeated Verify/Bench
+    * calls — reuse one materialized doubling chain per corpus instead
+    * of re-running the doubling chain per consumer. */
+  private def builtFor(spark: org.apache.spark.sql.SparkSession,
+      dir: String, docs: DataFrame): (DataFrame, DataFrame) =
+    IndexCache.artifact(spark, "suffixarray", dir) {
+      // NARROW projection before the persist: consumers only need
+      // the SA key — caching the full doubling frame (every rk_k +
+      // the token column) cost 4.7 s in columnar cache build at
+      // sf0.1 vs 0.8 s for the whole doubling chain itself
+      // (measured; the wide cache was the dominant construction
+      // cost, not the 17 window stages).
+      val r = ranked(positions(docs))
+        .select(col("shard"), col("gpos"), col("doc_id"), col("pos"),
+          col("sent"), col(s"rk$K"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // a failed build must not leak the ranks cache: if either
+      // materializing count throws, unpersist before rethrowing
+      // (nothing was published to the memo yet)
+      val p = try {
+        r.count() // materialize once, here, so no consumer re-runs it
+        // the SA-adjacent pair frame (one small integer row per
+        // position) is the family's SECOND shared frame: both
+        // consumers — spans coverage and the LRS top-K — otherwise
+        // re-run the SA window plus the two doc joins and the LCP
+        // walk from the cached ranks
+        val p0 = saPairs(r, docs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // a failed build must not leak the ranks cache: if either
-        // materializing count throws, unpersist before rethrowing
-        // (nothing was published to `cached` yet)
-        val p = try {
-          r.count() // materialize once, here, so no consumer re-runs it
-          // the SA-adjacent pair frame (one small integer row per
-          // position) is the family's SECOND shared frame: both
-          // consumers — spans coverage and the LRS top-K — otherwise
-          // re-run the SA window plus the two doc joins and the LCP
-          // walk from the cached ranks
-          val p0 = saPairs(r, docs)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try { p0.count(); p0 }
-          catch { case t: Throwable =>
-            p0.unpersist(blocking = false); throw t }
-        } catch { case t: Throwable =>
-          r.unpersist(blocking = false); throw t }
-        cached.put(key, (r, p))
-        if (cached.size > MaxCached) {
-          val it = cached.entrySet().iterator()
-          val (er, ep) = it.next().getValue
-          er.unpersist(blocking = false)
-          ep.unpersist(blocking = false)
-          it.remove()
-        }
-        (r, p)
-      }
+        try { p0.count(); p0 }
+        catch { case t: Throwable =>
+          p0.unpersist(blocking = false); throw t }
+      } catch { case t: Throwable =>
+        r.unpersist(blocking = false); throw t }
+      (r, p)
     }
 
   /** Exact-LCP horizon: common prefixes measure exactly up to this
@@ -307,13 +292,13 @@ object SuffixArray {
 
   def saSpans(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     sized(spark, dir) { docs =>
-      val (r, p) = builtFor(docs, System.identityHashCode(spark) + "|" + dir)
+      val (r, p) = builtFor(spark, dir, docs)
       spanCoverage(docs, DedupPack.SpanGram, r, Some(p))
     }
 
   def saLrs(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     sized(spark, dir) { docs =>
-      val (r, p) = builtFor(docs, System.identityHashCode(spark) + "|" + dir)
+      val (r, p) = builtFor(spark, dir, docs)
       longestSpans(docs, r, pairs = Some(p))
     }
 

@@ -134,30 +134,13 @@ object TextPack extends QueryPack {
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(true)
 
-  /** [[dglOf]] memoized per corpus dir (the curatedFor accounting):
-    * the langid family — tx_langid, tx_langid_margin, the trained
-    * model behind the crawl pipeline and pred-keyed mixing — pays
-    * the corpus gram-hash pass ONCE per process. */
+  /** [[dglOf]] as an [[IndexCache]] artifact, read by the langid
+    * family: tx_langid, tx_langid_margin, the trained model behind
+    * the crawl pipeline and pred-keyed mixing. */
   private[operators] def dglFor(
-      s: SparkSession, dir: String): DataFrame = {
-    val cached = dglMemo.get(dir)
-    if (cached != null && !cached.sparkSession.sparkContext.isStopped)
-      cached
-    else dglLocks.computeIfAbsent(dir, _ => new Object).synchronized {
-      val again = dglMemo.get(dir)
-      if (again != null && !again.sparkSession.sparkContext.isStopped)
-        again
-      else {
-        val built = dglOf(Tables.documents(s, dir))
-        dglMemo.put(dir, built)
-        built
-      }
-    }
-  }
-  private val dglMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val dglLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+      s: SparkSession, dir: String): DataFrame =
+    IndexCache.artifact(s, "langidgrams", dir)(
+      dglOf(Tables.documents(s, dir)))
 
   /** (grid, prior) off a dgl frame — the model the scoring consumers
     * broadcast. */
@@ -307,18 +290,14 @@ object TextPack extends QueryPack {
     * per-doc sums are exact and order-free; vocab size rides a
     * broadcast one-row frame. Returns (doc_id, n_bigrams,
     * cross_entropy) with the entropy already [[Det.dround]]'d. */
-  private val entMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[operators] def bigramEntropy(s: SparkSession,
                                        dir: String): DataFrame =
-    // process-lifetime memo per corpus dir (the IndexCache/dglFor
-    // accounting): the bigram LM is ONE trained artifact that six
-    // consumers read (tx_lm_perplexity, the CCNet buckets, the
+    // an IndexCache artifact: the bigram LM is ONE trained model that
+    // six consumers read (tx_lm_perplexity, the CCNet buckets, the
     // curriculum bands, and the three DoReMi-family queries via
-    // domLosses) — each was re-training it from scratch
-    entMemo.computeIfAbsent(dir,
-      _ => bigramEntropyOf(tokenized(s, dir)).localCheckpoint(eager = true))
+    // domLosses)
+    IndexCache.artifact(s, "bigramlm", dir)(
+      bigramEntropyOf(tokenized(s, dir)).localCheckpoint(eager = true))
 
   /** [[bigramEntropy]] over any (doc_id, toks) frame — the corpus
     * pipeline trains the LM on the CURATED crawl corpus itself (the
@@ -346,9 +325,8 @@ object TextPack extends QueryPack {
           / (count(lit(1)) * lit(1e4)), 4).as("cross_entropy"))
   }
 
-  // Tokenizer artifacts through the [[IndexCache]] memo — one
-  // training per corpus per process; vocab/segment/encode/bake-off
-  // consumers read the memoized table (the centroid accounting).
+  // Tokenizer artifacts through the [[IndexCache]] memo, read by the
+  // vocab/segment/encode/bake-off consumers.
   private[operators] def bpeMergesFor(s: SparkSession, dir: String): Seq[Bpe.Merge] =
     IndexCache.bpeMerges(dir)(Bpe.trainMerges(
       tokenized(s, dir).select(explode(col("toks")).as("w"))))

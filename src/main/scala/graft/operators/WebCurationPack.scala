@@ -32,40 +32,30 @@ object WebCurationPack extends QueryPack {
   private def canon(s: SparkSession, dir: String): DataFrame =
     UrlOps.withUrlParts(UrlOps.urls(Tables.documents(s, dir)), col("url"))
 
-  /** Process-lifetime memo of the parsed robots artifacts per corpus
-    * dir — (files, rules, delays), each a tiny domain-bounded frame
-    * whose lineage reaches back through the full canon parse. Six
-    * wc_ consumers (rules/delays/sitemaps tables, admit, frontier ×2,
-    * discovery) were each re-walking the synthesized files and paying
-    * three eager checkpoints per query; a production crawler keeps
-    * ONE parsed robots cache per cycle. Parsing is deterministic, so
-    * the memo is bit-identical to an in-query parse and the oracles
-    * replay the same rule arithmetic regardless of consumer. */
-  private val robotsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, DataFrame)]()
-
+  /** The parsed robots artifacts in [[IndexCache]] — (files, rules,
+    * delays), each a tiny domain-bounded frame whose lineage reaches
+    * back through the full canon parse. Read by six wc_ consumers
+    * (rules/delays/sitemaps tables, admit, frontier ×2, discovery);
+    * a production crawler keeps ONE parsed robots cache per cycle. */
   private[operators] def robotsArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    robotsMemo.computeIfAbsent(dir, { _ =>
+    IndexCache.artifact(s, "robots", dir) {
       implicit val sp: SparkSession = s
       val files = RobotsOps.robotsFor(canon(s, dir)).localCheckpoint(true)
       (files, RobotsOps.parseRules(files).localCheckpoint(true),
         RobotsOps.parseDelays(files).localCheckpoint(true))
-    })
+    }
 
   /** ...and the parsed sitemap artifacts: the raw per-host files
     * (index fan-out consumer) and the resolved (host, loc, lastmod)
-    * rows (urls table, re-crawl, discovery). Same accounting. */
-  private val sitemapMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame)]()
-
+    * rows (urls table, re-crawl, discovery). */
   private[operators] def sitemapArtifacts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    sitemapMemo.computeIfAbsent(dir, { _ =>
+    IndexCache.artifact(s, "sitemaps", dir) {
       val files = SitemapOps.sitemapsFor(canon(s, dir)).localCheckpoint(true)
       (files, SitemapOps.parseSitemaps(SitemapOps.resolveSitemaps(files))
         .localCheckpoint(true))
-    })
+    }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the canonicalizer itself, row by row — scheme/host case,

@@ -12,7 +12,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  lazy val session: SparkSession = build()
+
+  /** A local session with the specs' settings (getOrCreate: a new
+    * one only when no live session exists). */
+  def build(): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master("local[4]")

@@ -184,6 +184,54 @@ class IndexCacheSpec extends SparkSpec {
     }
   }
 
+  test("a build that asks for another kind returns") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val outer = Future {
+      IndexCache.artifact(spark, "spec-outer", "/corpus/n") {
+        IndexCache.artifact(spark, "spec-inner", "/corpus/n")(Seq(1L)) :+ 2L
+      }
+    }
+    assert(Await.result(outer, scala.concurrent.duration.Duration(60, "s"))
+      == Seq(1L, 2L))
+    assert(IndexCache.artifact[Seq[Long]](spark, "spec-inner", "/corpus/n")(
+      sys.error("the nested build must have been memoized")) == Seq(1L))
+  }
+
+  test("4 threads asking for one key run its build once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val calls = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+          def call(): Seq[Long] = {
+            start.await()
+            IndexCache.artifact(spark, "spec-race", "/corpus/r") {
+              builds.incrementAndGet(); Thread.sleep(200); Seq(7L)
+            }
+          }
+        })
+      }
+      start.countDown()
+      val got = calls.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get == 1, "one key was built more than once")
+      assert(got.forall(_ eq got.head))
+    } finally pool.shutdown()
+  }
+
+  test("a build that throws caches nothing, and the next call builds") {
+    intercept[IllegalStateException] {
+      IndexCache.artifact[Seq[Long]](spark, "spec-throw", "/corpus/t")(
+        throw new IllegalStateException("build failed"))
+    }
+    var builds = 0
+    val v = IndexCache.artifact(spark, "spec-throw", "/corpus/t") {
+      builds += 1; Seq(3L)
+    }
+    assert(builds == 1 && v == Seq(3L))
+  }
+
   test("without persistDir the memo stays process-local") {
     val prev = IndexCache.persistDir
     IndexCache.persistDir = None
