@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
-
 /** Driver benchmark: one JSON line with per-query wall seconds over
   * SPARK_GRAFT_SF_DIR. Queries run in sorted-name order after a
   * session warmup, so timings reflect the queries rather than JVM /
@@ -10,66 +7,17 @@ import org.apache.spark.sql.functions.{count, lit}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: scheduler + parquet reader + a first shuffle
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Tables.names.foreach(n => Tables.read(spark, sfDir, n).limit(1).count())
-    // Fixed-work calibration sentinel, measured FIRST and LAST: a
-    // constant synthetic shuffle+agg whose cost depends only on the
-    // host (never on SF or the queries). Two runs of the same bench
-    // differ in sentinel time exactly by their ambient inflation
-    // (JVM overlap, host contention), so a cross-run per-query
-    // comparison can be normalized by the sentinel ratio instead of
-    // guessing whether a slowdown is a regression or the machine.
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(100000000L).selectExpr("id % 997 AS k")
-        .groupBy("k").count()
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    sentinel() // untimed: pay the sentinel's own codegen first-touch
-    val sentinelFirst = sentinel()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    // the calibration sentinel, measured FIRST and LAST
+    Harness.sentinel(spark) // untimed: pay the sentinel's own codegen first-touch
+    val sentinelFirst = Harness.sentinel(spark)
     // full JSON escape incl. control chars — exception messages can
     // carry tabs etc. which would make the emitted line unparseable
     def jstr(s: String): String = JsonStr.jstr(s)
-    def time(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Long, Option[String]) = {
-      // reclaim finished-query state (broadcasts, shuffle files) so a
-      // GC pause triggered by query N isn't billed to query N+1
-      System.gc()
-      val obs = new Observation()
-      val t0 = System.nanoTime()
-      // noop sink, not count(): count() lets Catalyst prune away the
-      // per-row expression work of map-only queries, timing a skeleton.
-      // observe() rides the same action, so row counts are free.
-      val err: Option[String] =
-        try {
-          fn(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
-            .write.format("noop").mode("overwrite").save()
-          None
-        } catch { case t: Throwable =>
-          Some(t.getClass.getSimpleName +
-            Option(t.getMessage).map(m =>
-              ": " + m.linesIterator.next().take(160)).getOrElse(""))
-        }
-      // failed query: -1 sentinel, never a healthy-looking time
-      val dt = if (err.isEmpty) (System.nanoTime() - t0) / 1e9 else -1.0
-      val rows = if (err.isEmpty) obs.get("rows").asInstanceOf[Long] else -1L
-      (dt, rows, err)
-    }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (dt, rows, err) = time(name, fn)
+    val firstPass = Harness.select(Seq("")).map { case (name, fn) =>
+      val (dt, rows, err) = Harness.time(fn(spark, sfDir))
       println(f"[bench] $name%-24s $dt%8.2f s  $rows%9d rows" +
         err.map("  FAILED " + _).getOrElse(""))
       (name, dt, rows, err)
@@ -86,7 +34,7 @@ object Bench {
     val results = firstPass.map { case r @ (name, dt1, _, errOpt) =>
       if (errOpt.nonEmpty || dt1 <= RetimeOver) r
       else {
-        val (dt2, rows2, err2) = time(name, SparkEntry.queries(name))
+        val (dt2, rows2, err2) = Harness.time(SparkEntry.queries(name)(spark, sfDir))
         if (err2.nonEmpty) r // flaky second run: keep the good sample
         else {
           retimed(name) = (dt1, dt2)
@@ -114,7 +62,7 @@ object Bench {
     val mergeRows = mergeNames.flatMap(rowCounts.get).filter(_ >= 0).sum
     val mergeSecs = mergeNames.flatMap(times.get).filter(_ >= 0).sum
     val mergeRate = f3(if (mergeSecs > 0) mergeRows / mergeSecs else 0.0)
-    val sentinelLast = sentinel()
+    val sentinelLast = Harness.sentinel(spark)
     val cal = s""""sentinel_first_sec":${f3(sentinelFirst)},"sentinel_last_sec":${f3(sentinelLast)}"""
     val retimedJson = retimed.map { case (k, (a, b)) =>
       jstr(k) + s":[${f3(a)},${f3(b)}]" }.mkString("{", ",", "}")

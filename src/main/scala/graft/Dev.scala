@@ -1,77 +1,218 @@
 package graft
 
 import graft.operators.{DedupPack, QueryLayerPack, SimilarityPack}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only scale probe: replicate documents/events/embeddings N×
-  * (with shifted ids so dedup semantics stay meaningful) and time the
-  * heavy operator families — the measured evidence for the linearity
-  * claims in SCALE.md. Usage: runMain graft.DevStress [factor]
+/** Dev instruments, one main over the [[Harness]] session, reading
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as `Bench` does:
   *
-  * Probes:
-  *  - minhash / simhash / exact dedup over replicated documents
-  *    (scan-stage pipelines; wall should track input bytes)
-  *  - jaccardPairs over replicated documents, dfCap scaled by the
-  *    replication factor (replication multiplies every shingle's df
-  *    by the factor, so a fixed cap would drop everything and the
-  *    probe would measure the cap, not the join); wall should track
-  *    input + output-pair count
-  *  - capped cooccurrence over events with factor× users per day,
-  *    TopKPerKey form vs the old row_number-window form — the hot-day
-  *    evidence: output is cap-bounded either way, but the window form
-  *    funnels every cell of a day through one task
-  *  - ANN candidate generation over replicated embeddings (copies
-  *    collide into the same LSH buckets → bucket size grows ~factor×),
-  *    capped vs uncapped — the measured candidate-reduction factor
+  *  - `run <substr>[,..] [runs]`: each selected query `runs` times
+  *    (default 1) through the harness timer, with the sentinel before
+  *    and after, so a reader can tell ambient drift from the query's
+  *    own variance. Each run prints wall time and rows, the task
+  *    metrics a listener sums (jobs, stages, tasks, task time, GC,
+  *    shuffle, spill) and the stages that took the most task time.
+  *    Interpretation: `task/cpus` is the perfect-parallel floor; wall
+  *    far above it with low task time means stage latency (many small
+  *    stages) or driver work; wall near it means the query is
+  *    compute-bound and the win must come from less work per row.
+  *  - `plans <outDir> <suffix> <substr>[,..]`: writes each selected
+  *    query's `explain("formatted")` to `<outDir>/<name>_<suffix>.txt`.
+  *  - `card`: the MinHash-LSH value-banding cardinality audit.
+  *  - `stress <factor> [probe]`: the scale probes over factor×
+  *    replicated fixtures.
   *
-  * Usage: runMain graft.DevStress [factor] [probe-substring] — the
-  * optional filter skips probes whose name doesn't contain it
-  * (skipped probes report -1 rows, no wall line). One probe per
-  * process is also the honest measurement: concurrent local[32]
-  * sessions starve each other.
+  * A query filter that selects nothing fails, as `Verify`'s does. A
+  * conf the session does not set passes as a JVM property, e.g.
+  * `sbt 'set javaOptions += "-Dspark.sql.adaptive.enabled=false"'
+  * "runMain graft.Dev run q_pagerank"`.
   */
-object DevStress {
-  def main(args: Array[String]): Unit = {
-    val factor = if (args.nonEmpty) args(0).toInt else 20
-    val only = if (args.length > 1) args(1) else ""
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+object Dev {
+  type Query = (SparkSession, String) => DataFrame
 
-    val sf = "/root/testdata/sf0.1"
+  def main(args: Array[String]): Unit = {
+    val cmd: (SparkSession, String) => Unit = args.toList match {
+      case "run" :: subs :: runs if runs.size <= 1 =>
+        val picked = Harness.select(subs.split(",").toSeq)
+        run(_, _, picked, runs.headOption.fold(1)(_.toInt))
+      case List("plans", outDir, suffix, subs) =>
+        val picked = Harness.select(subs.split(",").toSeq)
+        plans(_, _, picked, outDir, suffix)
+      case List("card") => card
+      case "stress" :: factor :: probe if probe.size <= 1 =>
+        stress(_, _, factor.toInt, probe.headOption.getOrElse(""))
+      case _ => sys.error("usage: Dev run <substr>[,..] [runs] | " +
+        "plans <outDir> <suffix> <substr>[,..] | card | " +
+        "stress <factor> [probe]")
+    }
+    val spark = Harness.session()
+    try cmd(spark, Harness.sfDir) finally spark.stop()
+  }
+
+  /** Sums the task metrics of everything that runs while attached. */
+  private class TaskSums extends SparkListener {
+    var jobs, stages, tasks = 0L
+    var taskMs, gcMs, shufReadB, shufWriteB, spillB = 0L
+    /** stage id -> (name, tasks, task ms) */
+    val perStage = scala.collection.mutable.Map.empty[Int, (String, Long, Long)]
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      synchronized { jobs += 1 }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stages += 1
+        val (_, n, ms) = perStage.getOrElse(s.stageInfo.stageId, ("", 0L, 0L))
+        perStage(s.stageInfo.stageId) =
+          (s.stageInfo.name.takeWhile(_ != '\n').take(90), n, ms)
+      }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      val m = t.taskMetrics
+      if (m != null) {
+        val (nm, n, ms) = perStage.getOrElse(t.stageId, ("", 0L, 0L))
+        perStage(t.stageId) = (nm, n + 1, ms + m.executorRunTime)
+        taskMs += m.executorRunTime
+        gcMs += m.jvmGCTime
+        spillB += m.memoryBytesSpilled
+        shufReadB += m.shuffleReadMetrics.totalBytesRead
+        shufWriteB += m.shuffleWriteMetrics.bytesWritten
+      }
+    }
+  }
+
+  private def run(spark: SparkSession, sfDir: String,
+                  picked: Seq[(String, Query)], runs: Int): Unit = {
+    Harness.warmUp(spark, sfDir)
+    Harness.sentinel(spark) // untimed: pay the sentinel's own codegen
+    println(f"[dev] sentinel ${Harness.sentinel(spark)}%.2f s")
+    val cpus = spark.sparkContext.defaultParallelism
+    for ((name, q) <- picked; r <- 1 to runs) {
+      val l = new TaskSums
+      spark.sparkContext.addSparkListener(l)
+      val (secs, rows, err) = Harness.time(q(spark, sfDir))
+      // the listener bus is async and its drain API is private[spark];
+      // a fixed wait is fine for a dev instrument
+      Thread.sleep(300)
+      spark.sparkContext.removeSparkListener(l)
+      l.synchronized {
+        println(f"[dev] $name%-24s r$r wall=$secs%6.2f s rows=$rows%d  " +
+          f"jobs=${l.jobs}%d stages=${l.stages}%d tasks=${l.tasks}%d  " +
+          f"task=${l.taskMs / 1000.0}%.1f s (/$cpus=${l.taskMs / 1000.0 / cpus}%.2f) " +
+          f"gc=${l.gcMs / 1000.0}%.2f s sr=${l.shufReadB / 1e6}%.1f MB " +
+          f"sw=${l.shufWriteB / 1e6}%.1f MB spill=${l.spillB / 1e6}%.1f MB" +
+          err.map("  FAILED " + _).getOrElse(""))
+        l.perStage.toSeq.sortBy(-_._2._3).take(15).foreach {
+          case (id, (nm, n, ms)) =>
+            println(f"[dev.stage] $id%5d ${ms / 1000.0}%7.2f s  n=$n%4d  $nm")
+        }
+      }
+    }
+    println(f"[dev] sentinel ${Harness.sentinel(spark)}%.2f s")
+  }
+
+  private def plans(spark: SparkSession, sfDir: String,
+                    picked: Seq[(String, Query)], outDir: String,
+                    suffix: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    picked.foreach { case (name, q) =>
+      val plan = q(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
+        plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
+    }
+  }
+
+  /** Doc-level vs signature-level band-join candidate counts on the
+    * fixture corpus (guide §2.5 / SCALE.md): the evidence that banding
+    * over distinct signatures bounds the hot-bucket quadraticity. */
+  private def card(spark: SparkSession, sfDir: String): Unit = {
+    import graft.functions.Hashing
+    val toks = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val sig = DedupPack.signaturesFrom(toks)
+      .localCheckpoint(eager = true)
+    val sigCols = (0 until Hashing.NumPerms).map(i => col(s"mh$i"))
+    val nDocs = sig.count()
+    val groups = sig.groupBy(sigCols: _*).agg(min(col("doc_id")).as("sid"),
+      count(lit(1)).as("n")).localCheckpoint(eager = true)
+    val nSigs = groups.count()
+    val maxGroup = groups.agg(max(col("n"))).head().getLong(0)
+    def rawBandMatches(b: DataFrame): Long =
+      b.alias("a").join(b.alias("b"),
+          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.doc_id") < col("b.doc_id")).count()
+    val docBands = DedupPack.bandsFrom(sig)
+      .localCheckpoint(eager = true)
+    val valBands = DedupPack.bandsFrom(
+      groups.select(col("sid").as("doc_id") +: sigCols: _*))
+      .localCheckpoint(eager = true)
+    val docMatches = rawBandMatches(docBands)
+    val valMatches = rawBandMatches(valBands)
+    // the value-level path's OUTPUT work: expanded cross pairs + the
+    // same-signature pairs (both duplicate-free by construction)
+    val samePairs = groups.agg(sum(expr("n * (n - 1) DIV 2")))
+      .head().getLong(0)
+    println(s"[card] docs=$nDocs distinct_sigs=$nSigs max_sig_group=$maxGroup")
+    println(s"[card] band_join_matches doc_level=$docMatches " +
+      s"value_level=$valMatches same_sig_pairs=$samePairs")
+  }
+
+  /** Scale probes: replicate documents/events/embeddings factor× (with
+    * shifted ids so dedup semantics stay meaningful) and time the
+    * heavy operator families — the measured evidence for the
+    * linearity claims in SCALE.md:
+    *  - minhash / simhash / exact dedup over replicated documents
+    *    (scan-stage pipelines; wall should track input bytes)
+    *  - jaccardPairs over replicated documents, dfCap scaled by the
+    *    replication factor (replication multiplies every shingle's df
+    *    by the factor, so a fixed cap would drop everything and the
+    *    probe would measure the cap, not the join); wall should track
+    *    input + output-pair count
+    *  - capped cooccurrence over events with factor× users per day,
+    *    TopKPerKey form vs the old row_number-window form — the hot-day
+    *    evidence: output is cap-bounded either way, but the window form
+    *    funnels every cell of a day through one task
+    *  - ANN candidate generation over replicated embeddings (copies
+    *    collide into the same LSH buckets → bucket size grows ~factor×),
+    *    capped vs uncapped — the measured candidate-reduction factor
+    *  - and the rest below, one commented block each.
+    *
+    * `only` skips probes whose name doesn't contain it (skipped probes
+    * report -1 rows, no wall line); a filter that runs no probe is an
+    * error. One probe per process is also the honest measurement:
+    * concurrent wide sessions starve each other.
+    */
+  private def stress(spark: SparkSession, sf: String, factor: Int,
+                     only: String): Unit = {
+    implicit val sp: SparkSession = spark
     val docs = Tables.documents(spark, sf)
     val big = docs.crossJoin(
         spark.range(factor).select(col("id").as("rep")))
       .select((col("doc_id") * factor + col("rep")).as("doc_id"),
         col("text"), col("lang"), col("source"), col("n_chars"))
     big.write.mode("overwrite").parquet("/tmp/stress_docs")
-    val n = spark.read.parquet("/tmp/stress_docs").count()
+    val renamed = spark.read.parquet("/tmp/stress_docs")
+    val n = renamed.count()
 
-    /** Times a noop-sink materialization; row count rides the action.
-      * Probes not matching the CLI filter are skipped (-1). The
+    /** Wall seconds and rows of one probe through the harness timer.
+      * Probes not matching the CLI filter are skipped (-1 rows). The
       * frame is by-name: operators with EAGER internal stages
-      * (knnGraphOver's per-round checkpoints) must build inside the
-      * clock, and a skipped probe must not pay them at all. */
-    def time(name: String, df: => DataFrame): Long = {
-      if (only.nonEmpty && !name.contains(only)) return -1L
-      System.gc()
-      val obs = new Observation()
-      val t0 = System.nanoTime()
-      df.observe(obs, count(lit(1)).as("rows"))
-        .write.format("noop").mode("overwrite").save()
-      val rows = obs.get("rows").asInstanceOf[Long]
-      println(f"[stress] x$factor%-3d $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  $rows%10d rows")
-      rows
+      * (knnGraphOver's per-round checkpoints) build inside the clock,
+      * and a skipped probe does not pay them at all. A probe whose
+      * result is driver-side times a frame of that many rows. */
+    var ran = 0
+    def time(name: String, df: => DataFrame): (Double, Long) = {
+      if (!name.contains(only)) return (-1.0, -1L)
+      ran += 1
+      val (secs, rows, err) = Harness.time(df)
+      println(f"[stress] x$factor%-3d $name%-24s $secs%8.2f s  $rows%10d rows" +
+        err.map("  FAILED " + _).getOrElse(""))
+      (secs, rows)
     }
 
-    val renamed = spark.read.parquet("/tmp/stress_docs")
     import graft.functions.Hashing
     val toks = renamed.select(col("doc_id"), split(col("text"), " ").as("toks"))
     val hsFrame = toks.select(col("doc_id"),
@@ -82,8 +223,8 @@ object DevStress {
     time("minhash_native",
       hsFrame.select(col("doc_id"),
         graft.plans.MinHash8.sig(col("hs")).as("sig")))
-    time("simhash_fold", DedupStressHelper.simhash(renamed, native = false))
-    time("simhash_native", DedupStressHelper.simhash(renamed, native = true))
+    time("simhash_fold", simhash(renamed, native = false))
+    time("simhash_native", simhash(renamed, native = true))
     time("exact_dedup",
       renamed.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")), count(lit(1))))
@@ -140,11 +281,8 @@ object DevStress {
     // jsonl export: spool factor× docs into gzip shards and parse
     // every line back — one sequential pass per source partition,
     // so wall should track bytes; the per-doc parse dominates
-    {
-      implicit val sp: SparkSession = spark
-      time("jsonl_roundtrip", graft.sources.JsonlShards.parseShards(
-        graft.sources.JsonlShards.shardsFromDocuments(renamed)))
-    }
+    time("jsonl_roundtrip", graft.sources.JsonlShards.parseShards(
+      graft.sources.JsonlShards.shardsFromDocuments(renamed)))
 
     // mega-component span dedup: ONE 16-token boilerplate sentence
     // appended to EVERY doc (the "sentence spanning 10^5 docs" case),
@@ -173,7 +311,7 @@ object DevStress {
     // pair of numbers is this sliver ratio vs the fresh-batch one
     // where only hash fp-rate routes rows to the exact join.
     // guard matches the probe NAMES time() prints, so a copied name
-    // (e.g. `DevStress 20 increm_dedup_bloom`) still selects the block
+    // (e.g. `Dev stress 20 increm_dedup_bloom`) still selects the block
     def wants(names: String*): Boolean =
       only.isEmpty || names.exists(_.contains(only))
     if (wants("increm_dedup_sliver", "increm_dedup_bloom",
@@ -257,8 +395,8 @@ object DevStress {
     val buckets = SimilarityPack.bucketize(bigEmb)
     def pairs(side: DataFrame): DataFrame =
       SimilarityPack.candidateIdPairs(side)
-    val nUncapped = time("ann_cand_uncapped", pairs(buckets))
-    val nCapped = time("ann_cand_capped",
+    val (_, nUncapped) = time("ann_cand_uncapped", pairs(buckets))
+    val (_, nCapped) = time("ann_cand_capped",
       pairs(SimilarityPack.capBuckets(buckets)))
     // both sides must have RUN — a filtered probe returns the -1
     // skip sentinel, which would print a nonsense negative ratio
@@ -271,8 +409,8 @@ object DevStress {
       .crossJoin(spark.range(factor * 1000L).select(col("id").as("hid")))
       .select(col("hid").as("vec_id"), col("embedding"))
     val hotBuckets = SimilarityPack.bucketize(hot)
-    val hu = time("ann_hotbucket_uncapped", pairs(hotBuckets))
-    val hc = time("ann_hotbucket_capped",
+    val (_, hu) = time("ann_hotbucket_uncapped", pairs(hotBuckets))
+    val (_, hc) = time("ann_hotbucket_capped",
       pairs(SimilarityPack.capBuckets(hotBuckets)))
     if (hc > 0 && hu >= 0)
       println(f"[stress] x$factor%-3d hot-bucket reduction      ${hu.toDouble / hc}%8.2fx")
@@ -291,6 +429,54 @@ object DevStress {
     // track query count (vec_id % 10 scales with N), never N²
     time("knn_search", SimilarityPack.knnSearchOver(knnVecs))
 
+    /** Times the corpus-depth HNSW schedule against the fixed 2-level
+      * one over `vecs` (probes `<prefix>_depth<L>` and
+      * `<prefix>_2level`) and, when both ran, prints each one's
+      * per-round expansion sizes and recall@K against the brute-force
+      * truth — the deep schedule must cut candidates WITHOUT giving
+      * recall back. (An 8-round build — NN-Descent's ~log n guidance —
+      * was probed and changed neither form's recall by >0.01: at ×20
+      * recall is ENTRY-TRAVEL-bound, not convergence-bound; see the
+      * SCALE.md round-14 row.) */
+    def hnswCompare(prefix: String, vecs: DataFrame): Unit = {
+      val nVec = vecs.count()
+      val levels = SimilarityPack.hnswLevels(nVec)
+      val layerGraphs = (1 to levels).map(l => l ->
+        SimilarityPack.knnGraphOver(vecs.filter(
+          SimilarityPack.hnswMemberAt(col("vec_id"), l)))).toMap
+      val base = SimilarityPack.knnGraphOver(vecs)
+      def entriesAt(top: Int) =
+        (SimilarityPack.searchEntriesOf(vecs,
+          Some(SimilarityPack.hnswMemberAt(col("vec_id"), top))) ++
+          SimilarityPack.searchEntriesOf(vecs)).distinct.sorted
+      def run(name: String, sched: Seq[Int], top: Int)
+          : (DataFrame, Seq[Long]) = {
+        val counts = scala.collection.mutable.Buffer.empty[Long]
+        var out: DataFrame = null
+        time(name, { out = SimilarityPack.beamSearchOver(vecs,
+          sched.map(layerGraphs) ++
+            Seq.fill(SimilarityPack.HnswFineRounds)(base),
+          entriesAt(top), Some(counts)); out })
+        (out, counts.toSeq)
+      }
+      val (deepRes, deep) = run(s"${prefix}_depth$levels",
+        SimilarityPack.hnswSchedule(levels), levels)
+      val (twoRes, two) = run(s"${prefix}_2level", Seq(1, 1), 1)
+      // a narrower filter (e.g. only="hnsw_search_2level") skips one
+      // run and leaves its frame null — compare only when both ran
+      if (deepRes != null && twoRes != null) {
+        val truth = SimilarityPack.bruteTruth(vecs)
+          .localCheckpoint(eager = true)
+        def recall(res: DataFrame): Double = SimilarityPack.recallRow(
+          res.select(col("qid").as("src"), col("nbr_id").as("dst")), truth)
+          .collect()(0).getAs[Double]("recall")
+        println(s"[stress] x$factor $prefix ($nVec vecs) expanded candidates: " +
+          s"depth-$levels = ${deep.sum} ${deep.mkString("[", ",", "]")} " +
+          s"recall ${recall(deepRes)} vs 2-level = ${two.sum} " +
+          s"${two.mkString("[", ",", "]")} recall ${recall(twoRes)}")
+      }
+    }
+
     // HNSW top-down search with CORPUS-DERIVED depth (r14): the
     // replicated corpus crosses the level thresholds the fixture SFs
     // can't (sf0.1 × 20 = 40k vectors → depth 3), so this probe runs
@@ -300,7 +486,6 @@ object DevStress {
     // equal-or-better localization, and that number is what scales
     // (expansion rows are the search's only corpus-bound exchange)
     if (wants("hnsw_search")) { // probe names below all contain it
-      import scala.collection.mutable
       // INTERPOLATED replicas, not copies: identical copies make the
       // probe space 2 k isolated duplicate-clusters — NN-Descent
       // edges all land INSIDE a cluster (your 6 nearest neighbors
@@ -325,50 +510,8 @@ object DevStress {
         .select(col("vec_id"), col("embedding"),
           graft.functions.Similarity.norm(col("embedding")).as("nrm"))
         .persist()
-      val nVec = pvecs.count()
-      val levels = SimilarityPack.hnswLevels(nVec)
-      // (an 8-round build — NN-Descent's ~log n guidance — was
-      // probed and changed neither form's recall by >0.01: at this
-      // factor recall is ENTRY-TRAVEL-bound, not convergence-bound;
-      // see the SCALE.md round-14 row)
-      val layerGraphs = (1 to levels).map(l => l ->
-        SimilarityPack.knnGraphOver(pvecs.filter(
-          SimilarityPack.hnswMemberAt(col("vec_id"), l)))).toMap
-      val base = SimilarityPack.knnGraphOver(pvecs)
-      def entriesAt(top: Int) =
-        (SimilarityPack.searchEntriesOf(pvecs,
-          Some(SimilarityPack.hnswMemberAt(col("vec_id"), top))) ++
-          SimilarityPack.searchEntriesOf(pvecs)).distinct.sorted
-      def run(name: String, sched: Seq[Int], top: Int,
-              counts: mutable.Buffer[Long]): DataFrame = {
-        var out: DataFrame = null
-        time(name, { out = SimilarityPack.beamSearchOver(pvecs,
-          sched.map(layerGraphs) ++
-            Seq.fill(SimilarityPack.HnswFineRounds)(base),
-          entriesAt(top), Some(counts)); out })
-        out
-      }
-      val deep = mutable.Buffer.empty[Long]
-      val deepRes = run(s"hnsw_search_depth$levels",
-        SimilarityPack.hnswSchedule(levels), levels, deep)
-      val two = mutable.Buffer.empty[Long]
-      val twoRes = run("hnsw_search_2level", Seq(1, 1), 1, two)
-      // a narrower time()-filter (e.g. only="hnsw_search_2level")
-      // skips one run and leaves its frame null — compare only when
-      // both ran (a `return` here would skip every later probe)
-      // recall@K against the brute-force truth — the deep schedule
-      // must cut candidates WITHOUT giving recall back
-      if (deepRes != null && twoRes != null) {
-        val truth = SimilarityPack.bruteTruth(pvecs)
-          .localCheckpoint(eager = true)
-        def recall(res: DataFrame): Double = SimilarityPack.recallRow(
-          res.select(col("qid").as("src"), col("nbr_id").as("dst")), truth)
-          .collect()(0).getAs[Double]("recall")
-        println(s"[stress] x$factor hnsw expanded candidates: " +
-          s"depth-$levels = ${deep.sum} ${deep.mkString("[", ",", "]")} " +
-          s"recall ${recall(deepRes)} vs 2-level = ${two.sum} " +
-          s"${two.mkString("[", ",", "]")} recall ${recall(twoRes)}")
-      }
+      hnswCompare("hnsw_search", pvecs)
+      pvecs.unpersist()
     }
 
     // HNSW over a ZIPF-CLUSTER mixture (r15): the three probe
@@ -384,7 +527,6 @@ object DevStress {
     // THIS geometry: does the top-two coarse schedule still trade
     // recall for candidates the way the manifold probe showed?
     if (wants("hnsw_zipf")) {
-      import scala.collection.mutable
       val nC = 64
       val baseVecs = emb.filter(col("embedding").isNotNull)
         .select(col("vec_id"), col("embedding"))
@@ -411,41 +553,7 @@ object DevStress {
         .select(col("vec_id"), col("embedding"),
           graft.functions.Similarity.norm(col("embedding")).as("nrm"))
         .persist()
-      val nVec = zvecs.count()
-      val levels = SimilarityPack.hnswLevels(nVec)
-      val layerGraphs = (1 to levels).map(l => l ->
-        SimilarityPack.knnGraphOver(zvecs.filter(
-          SimilarityPack.hnswMemberAt(col("vec_id"), l)))).toMap
-      val base = SimilarityPack.knnGraphOver(zvecs)
-      def entriesAt(top: Int) =
-        (SimilarityPack.searchEntriesOf(zvecs,
-          Some(SimilarityPack.hnswMemberAt(col("vec_id"), top))) ++
-          SimilarityPack.searchEntriesOf(zvecs)).distinct.sorted
-      def run(name: String, sched: Seq[Int], top: Int,
-              counts: mutable.Buffer[Long]): DataFrame = {
-        var out: DataFrame = null
-        time(name, { out = SimilarityPack.beamSearchOver(zvecs,
-          sched.map(layerGraphs) ++
-            Seq.fill(SimilarityPack.HnswFineRounds)(base),
-          entriesAt(top), Some(counts)); out })
-        out
-      }
-      val deep = mutable.Buffer.empty[Long]
-      val deepRes = run(s"hnsw_zipf_depth$levels",
-        SimilarityPack.hnswSchedule(levels), levels, deep)
-      val two = mutable.Buffer.empty[Long]
-      val twoRes = run("hnsw_zipf_2level", Seq(1, 1), 1, two)
-      if (deepRes != null && twoRes != null) {
-        val truth = SimilarityPack.bruteTruth(zvecs)
-          .localCheckpoint(eager = true)
-        def recall(res: DataFrame): Double = SimilarityPack.recallRow(
-          res.select(col("qid").as("src"), col("nbr_id").as("dst")), truth)
-          .collect()(0).getAs[Double]("recall")
-        println(s"[stress] x$factor hnsw_zipf ($nVec vecs, $nC clusters): " +
-          s"depth-$levels = ${deep.sum} ${deep.mkString("[", ",", "]")} " +
-          s"recall ${recall(deepRes)} vs 2-level = ${two.sum} " +
-          s"${two.mkString("[", ",", "]")} recall ${recall(twoRes)}")
-      }
+      hnswCompare("hnsw_zipf", zvecs)
       zvecs.unpersist()
     }
 
@@ -457,21 +565,20 @@ object DevStress {
     // width with the measured edges (disjoint copies also pin that
     // ranks stay bit-identical per copy — integer arithmetic is
     // replica-independent).
-    if (wants("pagerank_3rounds")) {
+    def bigEdges(a: String, b: String): DataFrame = {
       val li = Tables.lineitem(spark, sf)
         .select(col("l_orderkey"), col("l_suppkey"))
       val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
       val e1 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + lit(1L << 40)).as("dst"))
+        .select(col("l_suppkey").as(a),
+          (col("o_custkey") + lit(1L << 40)).as(b))
       val shift = 1L << 50 // copies live in disjoint id ranges
-      val eBig = e1.crossJoin(spark.range(factor).select(col("id").as("rep")))
-        .select((col("src") + col("rep") * shift).as("src"),
-          (col("dst") + col("rep") * shift).as("dst"))
-      val t0 = System.nanoTime()
-      val n2 = graft.operators.PageRank.fixedPoint(eBig, iters = 3).count()
-      println(f"[stress] x$factor%-3d pagerank_3rounds          ${(System.nanoTime() - t0) / 1e9}%8.2f s  $n2%10d rows")
+      e1.crossJoin(spark.range(factor).select(col("id").as("rep")))
+        .select((col(a) + col("rep") * shift).as(a),
+          (col(b) + col("rep") * shift).as(b))
     }
+    time("pagerank_3rounds",
+      graft.operators.PageRank.fixedPoint(bigEdges("src", "dst"), iters = 3))
 
     // k-means: one Lloyd step over the replicated embeddings — per
     // iteration ONE scan (literal-centroid argmax via codegen'd
@@ -479,9 +586,9 @@ object DevStress {
     // vectors
     if (wants("kmeans_step")) {
       val vq = graft.operators.KMeans.quantize(bigEmb)
-      val t0 = System.nanoTime()
-      graft.operators.KMeans.train(vq, iters = 1)
-      println(f"[stress] x$factor%-3d kmeans_step               ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+      // rows: the trained centroids
+      time("kmeans_step",
+        spark.range(graft.operators.KMeans.train(vq, iters = 1).size).toDF())
     }
 
     // SemDeDup sizing rule: with k FIXED, clusters swell ∝ N and the
@@ -520,8 +627,8 @@ object DevStress {
             col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id"), col("b.vec_id"))
       }
-      val fixed = time("semdedup_pairs_fixed_k", clusterPairs(KMeans.K))
-      val scaled = time("semdedup_pairs_scaled_k",
+      val (_, fixed) = time("semdedup_pairs_fixed_k", clusterPairs(KMeans.K))
+      val (_, scaled) = time("semdedup_pairs_scaled_k",
         clusterPairs(KMeans.K * factor))
       if (scaled > 0 && fixed >= 0)
         println(f"[stress] x$factor%-3d semdedup k~N reduction    ${fixed.toDouble / scaled}%8.2fx")
@@ -546,14 +653,12 @@ object DevStress {
         val batch = spark.range(b * batchRows / 2, b * batchRows / 2 + batchRows)
           .select(col("id").as("k"), lit(b.toLong).as("ver"),
             concat(lit("payload"), col("id")).as("v"))
-        System.gc()
-        val t0 = System.nanoTime()
-        sink.upsert(batch, b.toLong)
-        val wall = (System.nanoTime() - t0) / 1e9
+        time(s"docstore_rotate_b$b",
+          { sink.upsert(batch, b.toLong); spark.range(0).toDF() })
         val stored = sink.current(spark).map(_.count()).getOrElse(0L)
         val nVers = Option(new java.io.File(dir).listFiles()).toSeq.flatten
           .count(_.getName.startsWith("v="))
-        println(f"[stress] x$factor%-3d docstore_rotate_b$b%-8d $wall%8.2f s  $stored%10d rows  $nVers versions")
+        println(f"[stress] x$factor%-3d docstore_rotate_b$b%-8d stored $stored%d rows in $nVers versions")
       }
     }
     // total-order enumeration at width: GlobalIndex over the
@@ -561,7 +666,7 @@ object DevStress {
     // track input rows (range shuffle + two linear passes); the
     // sanity bound checks the enumeration stayed a permutation.
     if (wants("global_index")) {
-      val keyed = spark.read.parquet("/tmp/stress_docs")
+      val keyed = renamed
         .select(col("doc_id"),
           graft.functions.Hashing.h32(col("doc_id").cast("string")).as("k"))
       val pos = graft.operators.GlobalIndex.withPosition(
@@ -575,31 +680,14 @@ object DevStress {
     // input tokens (the dup_spans cost class), and replication makes
     // every chunk a corpus-wide duplicate (worst-case histogram skew:
     // each chunk hash carries `factor` copies, partial-agg bounded)
-    if (wants("cdc_chunks")) {
-      val cdcToks = spark.read.parquet("/tmp/stress_docs")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      time("cdc_chunks", DedupPack.cdcChunks(cdcToks))
-      time("cdc_apply", DedupPack.cdcApply(cdcToks))
-    }
+    time("cdc_chunks", DedupPack.cdcChunks(toks))
+    time("cdc_apply", DedupPack.cdcApply(toks))
 
     // label propagation: same graph shape as pagerank — per round one
     // join of labels onto cached symmetric edges + a map-side argmax
     // agg; wall must track edges, not rounds × width
-    if (wants("labelprop")) {
-      val li = Tables.lineitem(spark, sf)
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
-      val e1 = li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("a"),
-          (col("o_custkey") + lit(1L << 40)).as("b"))
-      val shift = 1L << 50
-      val eBig = e1.crossJoin(spark.range(factor).select(col("id").as("rep")))
-        .select((col("a") + col("rep") * shift).as("a"),
-          (col("b") + col("rep") * shift).as("b"))
-      val t0 = System.nanoTime()
-      val n2 = graft.operators.LabelProp.propagate(eBig, iters = 2).count()
-      println(f"[stress] x$factor%-3d labelprop_2rounds         ${(System.nanoTime() - t0) / 1e9}%8.2f s  $n2%10d rows")
-    }
+    time("labelprop_2rounds",
+      graft.operators.LabelProp.propagate(bigEdges("a", "b"), iters = 2))
 
     // BPE vocabulary training: per-iteration cost must be FLAT in K
     // (each round is one scan of the cached symbol corpus + a pair
@@ -607,32 +695,25 @@ object DevStress {
     // only shrinks as merges fuse). Timing K=4 vs K=8 on the
     // replicated corpus: sec/iter should be ~equal, not growing.
     if (wants("bpe_vocab")) {
-      val words = spark.read.parquet("/tmp/stress_docs")
+      val words = renamed
         .select(explode(split(col("text"), " ")).as("w"))
       for (k <- Seq(4, 8)) {
-        val t0 = System.nanoTime()
-        val rows = graft.operators.Bpe.trainVocab(words, iters = k).count()
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[stress] x$factor%-3d bpe_vocab_k$k%-13s $secs%8.2f s  $rows%10d rows" +
-          f"  (${secs / k}%.2f s/iter)")
+        val (secs, _) = time(s"bpe_vocab_k$k",
+          graft.operators.Bpe.trainVocab(words, iters = k))
+        println(f"[stress] x$factor%-3d bpe_vocab_k$k%-13s ${secs / k}%.2f s/iter")
       }
     }
     // fuzzy blocking at width: replication floods every title block
     // with `factor` copies — the membership cap is what keeps the
     // self-join from going quadratic in the flood (same argument as
     // ann_hotbucket); pair output is cap-bounded per block.
-    if (wants("fuzzy_pairs")) {
-      time("fuzzy_pairs",
-        DedupPack.fuzzyPairs(spark.read.parquet("/tmp/stress_docs")))
-    }
+    time("fuzzy_pairs", DedupPack.fuzzyPairs(renamed))
     // classifier training: per-step cost must be FLAT in K (each step
     // is one broadcast join + doc-keyed agg + one j-keyed agg over
     // the CACHED sparse pairs; model state is 65 longs). Labels here
     // are a cheap parity split — the label function doesn't affect
     // the cost shape, only the gradient values.
     if (wants("classifier")) {
-      val toks = spark.read.parquet("/tmp/stress_docs")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
       val feat = graft.operators.Classifier.features(toks)
       // hash-parity labels: a plain doc_id % 2 split cancels EXACTLY
       // across replicas (identical features, balanced labels → G = 0)
@@ -640,53 +721,45 @@ object DevStress {
         (graft.functions.Hashing.h32(col("doc_id").cast("string")) % 2
           * graft.operators.Classifier.Units).as("y"))
       for (k <- Seq(4, 8)) {
-        val t0 = System.nanoTime()
-        val nnz = graft.operators.Classifier.train(feat, lab, iters = k)
-          .w.count(_ != 0)
-        val secs = (System.nanoTime() - t0) / 1e9
-        println(f"[stress] x$factor%-3d classifier_k$k%-13s $secs%8.2f s" +
-          f"  ($nnz%d nonzero w, ${secs / k}%.2f s/iter)")
+        // rows: the nonzero weights
+        val (secs, _) = time(s"classifier_k$k", spark.range(
+          graft.operators.Classifier.train(feat, lab, iters = k)
+            .w.count(_ != 0)).toDF())
+        println(f"[stress] x$factor%-3d classifier_k$k%-13s ${secs / k}%.2f s/iter")
       }
     }
     // WARC spool + walk: wall must track BYTES (archives are factor×
     // fatter per source; the walk is one sequential pass per archive,
     // parallelism = archive count — constant here, so sec ≈ linear in
     // factor is the honest expectation, not sublinear)
-    if (wants("warc_roundtrip")) {
-      implicit val sp = spark
-      time("warc_roundtrip",
-        graft.sources.Warc.parseArchives(
-          graft.sources.Warc.archivesFromDocuments(
-            spark.read.parquet("/tmp/stress_docs"))).toDF())
-    }
+    time("warc_roundtrip",
+      graft.sources.Warc.parseArchives(
+        graft.sources.Warc.archivesFromDocuments(
+          renamed)).toDF())
     // unigram training: cost must track DISTINCT WORDS (the grain
     // every post-wordcount pass runs at), not raw tokens — suffixing
     // every word with doc_id%factor grows the distinct-word inventory
     // ~factor× while the Zipf corpus itself is the same bytes
     if (wants("unigram_train")) {
-      val suffixed = spark.read.parquet("/tmp/stress_docs")
+      val suffixed = renamed
         .select(col("doc_id"),
           array_join(transform(split(col("text"), " "),
               w => concat(w, lit("~"), (col("doc_id") % factor).cast("string"))),
             " ").as("text"))
       val nw = graft.operators.Unigram.wordCounts(suffixed).count()
-      val t0 = System.nanoTime()
-      val v = graft.operators.Unigram.trainVocab(suffixed).count()
-      println(f"[stress] x$factor%-3d unigram_train            ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($nw%d distinct words, $v%d vocab rows)")
+      time("unigram_train", graft.operators.Unigram.trainVocab(suffixed))
+      println(f"[stress] x$factor%-3d unigram_train            $nw%d distinct words")
     }
     // crawl→text extraction: archives are factor× fatter, paragraph
     // count grows factor×, but the FREQUENT set stays ~constant
     // (banners/footer — replication only raises their df), so the
     // removal join stays a broadcast and wall must track bytes, not
     // the df of the hottest paragraph
-    if (wants("crawl_text")) {
-      implicit val sp = spark
-      time("crawl_text",
-        graft.operators.CrawlText.curated(
-          graft.sources.Warc.parseHttpRecords(
-            graft.sources.Warc.htmlResponseArchives(
-              spark.read.parquet("/tmp/stress_docs"))).toDF()))
-    }
+    time("crawl_text",
+      graft.operators.CrawlText.curated(
+        graft.sources.Warc.parseHttpRecords(
+          graft.sources.Warc.htmlResponseArchives(
+            renamed)).toDF()))
     // the full corpus-assembly composition at factor× input, with
     // per-stage wall: extraction scales in bytes, the gates are
     // scan-stage, dedup is the banded LSH join (replication floods
@@ -695,8 +768,6 @@ object DevStress {
     // replication does NOT grow — so end-to-end wall must track the
     // EARLY stages, and the tail must stay ~flat.
     if (wants("corpus_e2e")) {
-      implicit val sp = spark
-      val sdocs = spark.read.parquet("/tmp/stress_docs")
       val semb = Tables.embeddings(spark, sf).crossJoin(
           spark.range(factor).select(col("id").as("rep")))
         .select((col("vec_id") * factor + col("rep")).as("vec_id"),
@@ -707,15 +778,13 @@ object DevStress {
       val chrome = graft.operators.CrawlText.chromeFor(spark, sf)
       val model = graft.operators.TextPack.classifierModelFor(spark, sf)
       val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val t0 = System.nanoTime()
-      val manifest = graft.operators.SamplePack.corpusManifest(
-        spark, sdocs, semb, chrome, model,
-        onStage = (n, ns) => stages += (n -> ns))
-      val rows = manifest.count()
-      val total = (System.nanoTime() - t0) / 1e9
+      val (total, _) = time("corpus_e2e",
+        graft.operators.SamplePack.corpusManifest(
+          spark, renamed, semb, chrome, model,
+          onStage = (n, ns) => stages += (n -> ns)))
       val perStage = stages.map { case (n, ns) => f"$n=${ns / 1e9}%.2f" }
         .mkString(" ")
-      println(f"[stress] x$factor%-3d corpus_e2e              $total%8.2f s  $rows%10d rows  ($perStage tail=${total - stages.map(_._2).sum / 1e9}%.2f)")
+      println(f"[stress] x$factor%-3d corpus_e2e              $perStage tail=${total - stages.map(_._2).sum / 1e9}%.2f")
     }
     // URL canonicalization + domain rollup: the canonicalizer is a
     // pure scan-stage expression chain, so wall must track ROWS; the
@@ -724,7 +793,7 @@ object DevStress {
     if (wants("url_canon")) {
       val withDom = graft.operators.UrlOps.withUrlParts(
         graft.operators.UrlOps.urls(
-          spark.read.parquet("/tmp/stress_docs")), col("url"))
+          renamed), col("url"))
       time("url_canon", withDom.groupBy("domain")
         .agg(count(lit(1)).as("n_docs"),
           countDistinct("canonical").as("n_pages")))
@@ -734,10 +803,7 @@ object DevStress {
     // langs × buckets rows at ANY factor (the constant-model claim),
     // so wall must track input bytes while the broadcast grid and the
     // argmax stay fixed-size
-    if (wants("langid")) {
-      time("langid", graft.operators.TextPack.langIdOver(
-        spark.read.parquet("/tmp/stress_docs")))
-    }
+    time("langid", graft.operators.TextPack.langIdOver(renamed))
     // the PREDICTED-language curation chain at factor× pages with the
     // model trained on the BASE corpus (the corpus_e2e artifact
     // split): the gram-score pass and paragraph machinery must track
@@ -746,11 +812,10 @@ object DevStress {
     // the per-predicted-language removal set) stay ~constant under
     // replication (df only rises), so the anti-joins stay broadcast
     if (wants("crawl_predlang")) {
-      implicit val sp = spark
       val model = graft.operators.TextPack.modelFor(spark, sf)
       time("crawl_predlang",
         graft.operators.CrawlText.predictedCuratedOver(
-          spark.read.parquet("/tmp/stress_docs"), model))
+          renamed, model))
     }
     // crawl discovery at factor× pages (replication shifts doc_ids,
     // so the canonical page set grows with the factor): the link
@@ -759,9 +824,8 @@ object DevStress {
     // domain count (fixed site inventory) at every factor, and the
     // per-domain cap bounds the frontier output itself
     if (wants("frontier", "link_graph")) {
-      implicit val sp = spark
       val c = graft.operators.UrlOps.withUrlParts(
-        graft.operators.UrlOps.urls(spark.read.parquet("/tmp/stress_docs")),
+        graft.operators.UrlOps.urls(renamed),
         col("url"))
       time("link_graph", graft.operators.LinkOps.linkGraph(c))
       time("frontier", graft.operators.WebCurationPack.frontierOver(c))
@@ -775,8 +839,7 @@ object DevStress {
     // UNRELATED hashes from meeting (candidates ≈ true-dup pairs +
     // N²/2¹⁶ noise per band)
     if (wants("dhash")) {
-      val sdocs = spark.read.parquet("/tmp/stress_docs")
-      val h = graft.operators.MultimodalPack.dhashOf(spark, sdocs)
+      val h = graft.operators.MultimodalPack.dhashOf(spark, renamed)
       time("dhash_hash", h)
       time("dhash_dups", graft.operators.MultimodalPack.dhashDups(h))
     }
@@ -784,10 +847,9 @@ object DevStress {
     // stub grid) — decode+energies+fp must stay linear in clip bytes
     // (one ~1 KB clip per row); the pair join is the dhash_dups class
     if (wants("audio_fp")) {
-      implicit val sp = spark
       val clips = graft.sources.Multimodal.decodePcm16(
         graft.sources.Multimodal.syntheticNearDupAudio(
-          spark.read.parquet("/tmp/stress_docs")))
+          renamed))
       time("audio_fp", graft.sources.Multimodal.windowEnergies(clips)
         .select(col("snd_id"),
           graft.operators.PerceptualHash.audioFp(col("energies")).as("fp")))
@@ -798,20 +860,13 @@ object DevStress {
     // the response-dedup hash groupBy. Replicated docs share texts,
     // so every dup-response group floods factor-deep — the honest
     // dedup stress — while the admitted output stays input-linear.
-    if (wants("ift_turns", "ift_curated", "ift_feed")) {
-      val sdocs = spark.read.parquet("/tmp/stress_docs")
-      time("ift_turns", graft.operators.IftPack.turns(sdocs))
-      time("ift_curated", graft.operators.IftPack.curated(sdocs))
-      time("ift_feed", graft.operators.IftPack.sftFeed(sdocs))
-    }
+    time("ift_turns", graft.operators.IftPack.turns(renamed))
+    time("ift_curated", graft.operators.IftPack.curated(renamed))
+    time("ift_feed", graft.operators.IftPack.sftFeed(renamed))
     // novelty: under replication EVERY shingle is corpus-shared, so
     // all docs score 0 — the probe measures the gram-grain df agg +
     // join-back at flooded df, the dup_spans input-linear class
-    if (wants("novelty")) {
-      val toks = spark.read.parquet("/tmp/stress_docs")
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      time("novelty", graft.operators.DedupPack.noveltyScore(toks))
-    }
+    time("novelty", graft.operators.DedupPack.noveltyScore(toks))
     // Mergeable sketches: replicas collapse in the (source, hash)
     // distinct, so kmv_sketch runs factor× input into CONSTANT
     // sketch state (the 100 TB claim: shuffle carries K longs per
@@ -819,13 +874,12 @@ object DevStress {
     // instead, exercising the estimator at growing n while the
     // sketch rows stay at K per source either way.
     if (wants("kmv_sketch", "kmv_sketch_salted", "minhash_sig")) {
-      val sdocs = spark.read.parquet("/tmp/stress_docs")
-      time("kmv_sketch", graft.operators.SketchPack.kmvSketch(sdocs))
-      val salted = sdocs.withColumn("text",
+      time("kmv_sketch", graft.operators.SketchPack.kmvSketch(renamed))
+      val salted = renamed.withColumn("text",
         concat(col("text"), lit(" rep"), col("doc_id") % factor))
       time("kmv_sketch_salted",
         graft.operators.SketchPack.kmvSketch(salted))
-      time("minhash_sig", graft.operators.SketchPack.sigOf(sdocs))
+      time("minhash_sig", graft.operators.SketchPack.sigOf(renamed))
     }
     // CMS: replicas multiply every user's event count by factor, but
     // the cell inventory is ≤ D·W at any factor — the constant-state
@@ -843,10 +897,8 @@ object DevStress {
     // PCA Gramian: the d²-per-row explode is the declared scan cost;
     // output is d(d+1)/2 = 2,080 cells at ANY factor — wall must
     // track rows, the exchange must not.
-    if (wants("pca_gram")) {
-      time("pca_gram", graft.operators.Pca.gramUpper(
-        bigEmb.filter(col("embedding").isNotNull)))
-    }
+    time("pca_gram", graft.operators.Pca.gramUpper(
+      bigEmb.filter(col("embedding").isNotNull)))
     // Containment over a PER-TOKEN-salted replicated corpus: every
     // token carries its replica's marker, so every shingle differs
     // across replicas and cross-replica pairs vanish — the probe
@@ -858,7 +910,7 @@ object DevStress {
     // ×5 → 1.19 M ×20) — that run measures real duplication MASS,
     // the ds_minhash family's declared class, not the pipeline.
     if (wants("containment")) {
-      val salted = spark.read.parquet("/tmp/stress_docs")
+      val salted = renamed
         .select(col("doc_id"),
           transform(split(col("text"), " "),
             w => concat(w, lit("#"),
@@ -870,27 +922,20 @@ object DevStress {
     // sp_doremi_weights (bigram LM entropy + per-source rollup) at
     // factor× docs; output stays at |domains| rows, the MW loop
     // above it is driver math at domain cardinality.
-    if (wants("doremi_dom")) {
-      val sdocs = spark.read.parquet("/tmp/stress_docs")
-      time("doremi_dom", graft.operators.SamplePack.domLossFrame(
-        graft.operators.TextPack.bigramEntropyOf(
-          sdocs.select(col("doc_id"), split(col("text"), " ").as("toks"))),
-        sdocs))
-    }
-    spark.stop()
+    time("doremi_dom", graft.operators.SamplePack.domLossFrame(
+      graft.operators.TextPack.bigramEntropyOf(
+        toks),
+      renamed))
+    require(ran > 0, s"probe filter '$only' matched no probe")
   }
-}
 
-private object DedupStressHelper {
-  import org.apache.spark.sql.DataFrame
-  import graft.functions.Hashing
-  def simhash(docs: DataFrame, native: Boolean): DataFrame = {
+  private def simhash(docs: DataFrame, native: Boolean): DataFrame = {
     val hs = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"),
-        transform(array_distinct(col("toks")), t => Hashing.h32(t)).as("hs"))
+      .select(col("doc_id"), transform(array_distinct(col("toks")),
+        t => graft.functions.Hashing.h32(t)).as("hs"))
     val bits =
       if (native) graft.plans.SimHash32.simhash(col("hs"))
-      else graft.operators.DedupPack.simhashFold(col("hs"))
+      else DedupPack.simhashFold(col("hs"))
     hs.select(col("doc_id"), bits.as("simhash"))
   }
 }

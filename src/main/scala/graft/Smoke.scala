@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only schema smoke: print every table's schema + a row. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     println(s"== entry rows: ${SparkEntry.entry(spark).count()}")
     Tables.names.foreach { n =>
       try {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -32,15 +31,7 @@ object Verify {
       case _ => sys.error(
         "usage: Verify <sfDir> <outDir> [name-substring]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // a silently-empty enumeration must never produce a passing-looking
     // empty artifact (round 12's driver gate arrived as `{}`): fail loud
@@ -50,12 +41,9 @@ object Verify {
       "SparkEntry.queries is EMPTY — the gate would be vacuous")
     require(SparkEntry.oracleSql.nonEmpty,
       "SparkEntry.oracleSql is EMPTY — the gate would be vacuous")
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || name.contains(only) }
+    val selected = Harness.select(Seq(only))
     println(s"[verify] ${selected.size} of ${SparkEntry.queries.size} " +
       s"queries selected, ${SparkEntry.oracleSql.size} oracles")
-    require(selected.nonEmpty,
-      s"filter '$only' matched no queries — refusing a vacuous run")
     // oracle map FIRST: a truncated run must still be comparable
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${JsonStr.jstr(k)}: ${JsonStr.jstr(v)}" }
@@ -77,7 +65,7 @@ object Verify {
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      val tasks = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val tasks = selected.map { case (name, fn) =>
         pool.submit(new Runnable {
           def run(): Unit = {
             val t0 = System.nanoTime()

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * new corpus is cached and the predecessor unpersisted as soon as
   * the successor is materialized, so at most two corpus snapshots are
   * live. K iterations = K such passes, each cost-flat (the corpus
-  * only shrinks as merges fuse symbols) — measured in DevStress
+  * only shrinks as merges fuse symbols) — measured in `Dev stress`
   * (`bpe_vocab` probe). The loop runs on a [[LoopWidth]]-sized
   * session like PageRank: ~3 stages per round at full session width
   * over a small cached frame would be pure task-scheduling overhead.

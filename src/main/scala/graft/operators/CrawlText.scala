@@ -236,7 +236,7 @@ object CrawlText {
 
   /** The predicted-language curation CHAIN over any documents frame
     * and an already-trained langid model — [[predictedCuratedFor]]'s
-    * body, public so DevStress probes the production stages at
+    * body, public so `Dev stress` probes the production stages at
     * replicated scale with the model trained on the BASE corpus (the
     * corpus_e2e split: artifacts refresh on their own cadence, the
     * pipeline applies them to the fatter crawl wave). */

@@ -44,7 +44,7 @@ object DedupPack extends QueryPack {
   /** [[signatures]] over any (doc_id, toks) frame — the incremental
     * path signs base and delta slices separately; the corpus pipeline
     * signs the curated crawl text. */
-  private[operators] def signaturesFrom(tokens: DataFrame): DataFrame =
+  private[graft] def signaturesFrom(tokens: DataFrame): DataFrame =
     tokens
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
@@ -130,7 +130,7 @@ object DedupPack extends QueryPack {
     cross.unionByName(same)
   }
 
-  /** Dev-probe bridges (DevStress `band_pairs_*`): the value-banded
+  /** Dev-probe bridges (`Dev stress` `band_pairs_*`): the value-banded
     * production path and the doc-level reference form over a token
     * frame — identical candidate sets by the equivalence argument
     * above; the stress probe measures the quadratic gap between them
@@ -200,7 +200,7 @@ object DedupPack extends QueryPack {
   private def bands(s: SparkSession, dir: String): DataFrame =
     bandsFrom(sigsFor(s, dir))
 
-  private[operators] def bandsFrom(sig: DataFrame): DataFrame = {
+  private[graft] def bandsFrom(sig: DataFrame): DataFrame = {
     val sigCols = (0 until Hashing.NumPerms).map(i => col(s"mh$i"))
     val bandStructs = (0 until Hashing.NumBands).map(b =>
       struct(lit(b).as("band"), Hashing.bandKey(sigCols, b).as("key")))
@@ -220,7 +220,7 @@ object DedupPack extends QueryPack {
   /** The ds_containment body over any (doc_id, toks) frame —
     * candidates-first (the LSH banding), exact containment
     * verification only on those pairs, the ContainTau flag and the
-    * contained-side pick. Factored out so DevStress can drive it at
+    * contained-side pick. Factored out so `Dev stress` can drive it at
     * replicated scale. */
   def containmentPairs(corpus: DataFrame): DataFrame = {
     val cand = candidatePairsFromSig(signaturesFrom(corpus))
@@ -254,7 +254,7 @@ object DedupPack extends QueryPack {
     * toks). A prefix's shingle set is a SUBSET of its source's, so
     * every planted pair has containment exactly 1.0 on the excerpt
     * side while Jaccard sits near 0.4 — the case the operator exists
-    * to catch. Public for the DevStress probe. */
+    * to catch. Public for the `Dev stress` probe. */
   def withExcerpts(base: DataFrame): DataFrame =
     base.union(
       base.filter(col("doc_id") % ExcerptMod === 0)
@@ -809,7 +809,7 @@ object DedupPack extends QueryPack {
 
   /** The ds_incremental_dedup corpus split over any documents frame:
     * (history, batch) as content-hash projections — batch plays the
-    * newly-ingested snapshot. Factored out so [[graft.DevStress]]
+    * newly-ingested snapshot. Factored out so [[graft.Dev]] `stress`
     * probes the production wiring, not a re-implementation. */
   def incrementalSlices(docs: DataFrame): (DataFrame, DataFrame) = {
     val d = docs.select(col("doc_id"), Hashing.h32(col("text")).as("h"))
@@ -819,7 +819,7 @@ object DedupPack extends QueryPack {
   /** The ds_decontaminate body over any (doc_id, toks) frame:
     * `evalPred` rows play the held-out benchmark; their distinct
     * n-gram set is broadcast against every training doc's n-grams.
-    * Factored out so [[graft.DevStress]] probes the production
+    * Factored out so [[graft.Dev]] `stress` probes the production
     * stages at replicated scale. */
   def decontaminate(tokens: DataFrame, w: Int,
                     evalPred: org.apache.spark.sql.Column): DataFrame = {
@@ -1204,7 +1204,7 @@ object DedupPack extends QueryPack {
     * a projected alias referenced from inside the window lambda gets
     * re-inlined by projection collapse — the first cut re-split and
     * re-hashed the whole doc PER WINDOW slot (the UrlOps staging
-    * lesson, compounded by the HOF nesting: a ×5 DevStress probe that
+    * lesson, compounded by the HOF nesting: a ×5 `Dev stress` probe that
     * now runs in seconds had not finished in 20 minutes). */
   def winnowFps(tokens: DataFrame): DataFrame =
     tokens
@@ -1274,7 +1274,7 @@ object DedupPack extends QueryPack {
   /** Shingles with df ≤ [[JaccardDfCap]] survive into the pair join.
     * 5 is exercised at sf0.01 (29 shingles dropped); at corpus scale
     * the cap would be set from the df distribution of the boilerplate
-    * tail. [[graft.DevStress]] scales it with the replication factor
+    * tail. [[graft.Dev]] `stress` scales it with the replication factor
     * so the linearity probe measures the join, not the cap. */
   val JaccardDfCap = 5
 
@@ -1353,11 +1353,11 @@ object DedupPack extends QueryPack {
       .distinct()
 
   /** The ds_jaccard_pairs body over any (doc_id, toks) frame —
-    * factored out so DevStress can drive it at replicated scale. */
+    * factored out so `Dev stress` can drive it at replicated scale. */
   def jaccardPairs(tokens: DataFrame, dfCap: Int = JaccardDfCap,
                    sh0Pre: Option[DataFrame] = None): DataFrame = {
     // `sh0Pre`: the registered query passes the corpus-level shingle
-    // artifact; probe callers (DevStress replicas) build in-plan
+    // artifact; probe callers (`Dev stress` replicas) build in-plan
     val sh0 = sh0Pre.getOrElse(hashedShingles(tokens))
     // df cap: one extra agg + semi-join, both on the same 8-byte
     // shingle key the pair join shuffles on (partitioning reused)
@@ -1383,12 +1383,12 @@ object DedupPack extends QueryPack {
   }
 
   /** The ds_novelty_score body over any (doc_id, toks) frame —
-    * factored out so DevStress can drive it at replicated scale. */
+    * factored out so `Dev stress` can drive it at replicated scale. */
   def noveltyScore(tokens: DataFrame,
                    shPre: Option[DataFrame] = None): DataFrame = {
     // two references below (the df agg and the join back) — the
     // registered query reads the corpus-level artifact; probe callers
-    // (DevStress replicas) build in-plan
+    // (`Dev stress` replicas) build in-plan
     val sh = shPre.getOrElse(hashedShingles(tokens))
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     sh.join(df, Seq("shingle"))

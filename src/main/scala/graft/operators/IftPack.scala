@@ -221,7 +221,7 @@ object IftPack extends QueryPack {
         curatedFor(s, dir).select(col("conv_id")))))
 
   /** The full feed composition over any documents-shaped frame —
-    * `ift_sft_feed`'s body, exposed for the DevStress probe. */
+    * `ift_sft_feed`'s body, exposed for the `Dev stress` probe. */
   def sftFeed(docs: DataFrame): DataFrame =
     sftFeedOver(docs, curated(docs).select(col("conv_id")))
 
@@ -290,7 +290,7 @@ object IftPack extends QueryPack {
   }
 
   /** The full curation chain over any documents-shaped frame —
-    * `ift_curated_e2e`'s body, exposed for the DevStress probe.
+    * `ift_curated_e2e`'s body, exposed for the `Dev stress` probe.
     *
     * Broadcast discipline: only `templates` is hinted — the high-df
     * prompt inventory is chrome-class (frequency-thresholded, so its

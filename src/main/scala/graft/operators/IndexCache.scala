@@ -151,7 +151,7 @@ object IndexCache {
       case e: Exception =>
         // persistence is an optimization; never fail the query for it
         System.err.println(
-          s"IndexCache: could not persist $kind for $dir (${e.getMessage})")
+          s"IndexCache: could not persist $kind for $dir ($e)")
     }
 
   private def load[T <: AnyRef](root: String, kind: String, dir: String): Option[T] = {
@@ -179,7 +179,7 @@ object IndexCache {
       case e: Exception =>
         System.err.println(
           s"IndexCache: rejecting persisted $kind at $f " +
-            s"(${e.getMessage}); retraining")
+            s"($e); retraining")
         None
     } finally in.close()
   }
@@ -388,7 +388,7 @@ object IndexCache {
           case e: Exception =>
             System.err.println(
               s"IndexCache: persisted $kind frame for $key unreadable " +
-                s"(${e.getMessage}); rebuilding")
+                s"($e); rebuilding")
             None
         }
       if (loaded.isDefined) loaded.get
@@ -414,7 +414,7 @@ object IndexCache {
           case e: Exception =>
             System.err.println(
               s"IndexCache: could not persist $kind frame for $key " +
-                s"(${e.getMessage}); serving the in-process build")
+                s"($e); serving the in-process build")
             built.localCheckpoint(eager = true)
         }
       }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * The per-row distance is NOT a `zip_with`+`aggregate` fold —
   * interpreted higher-order lambdas cost ~20× here (measured by the
-  * DevStress kmeans probe). Instead, argmin ‖v−c‖² = argmax
+  * `Dev stress` kmeans probe). Instead, argmin ‖v−c‖² = argmax
   * (2·v·c − ‖c‖²) with v·c through the codegen'd
   * [[graft.plans.FloatDot]] — the ivfAssign plan shape — and the
   * reported distance recovered as ‖v‖² − bestScore.
@@ -121,7 +121,7 @@ object KMeans {
     *
     * `k` defaults to [[K]] (the oracle-pinned fixture size); at scale
     * it is the SemDeDup/IVF sizing dial — grow k ∝ N to hold the
-    * expected cluster size constant (DevStress `semdedup` probe
+    * expected cluster size constant (`Dev stress` `semdedup` probe
     * measures the pair-count consequence of NOT doing so). */
   def train(vq: DataFrame, iters: Int, k: Int = K): Seq[Array[Double]] = {
     // init + every Lloyd step is an action over the same frame —

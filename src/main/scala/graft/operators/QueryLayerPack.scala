@@ -38,7 +38,7 @@ object QueryLayerPack extends QueryPack {
   val LDiversityL = 3L
 
   /** The q22_cooccurrence body over any (day, user_id) cell frame —
-    * factored out so DevStress can probe it at replicated scale.
+    * factored out so `Dev stress` can probe it at replicated scale.
     *
     * The per-day cap is selected by the native [[graft.plans.TopKPerKey]]
     * operator, not a row_number window: a window partitioned by `day`

@@ -920,7 +920,7 @@ object SamplePack extends QueryPack {
 
   /** The ONE distributed pass behind the DoReMi loop: per-domain doc
     * count + entropy-unit sum (map-side combined, |domains| rows out
-    * at any corpus size) — also the DevStress probe surface. */
+    * at any corpus size) — also the `Dev stress` probe surface. */
   private[graft] def domLossFrame(ent: DataFrame,
                                   docs: DataFrame): DataFrame =
     ent.join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -931,7 +931,7 @@ object SamplePack extends QueryPack {
       .agg(count(lit(1)).cast("long").as("n"), sum(col("ceu")).as("su"))
 
   /** The sp_corpus_e2e dataflow over EXPLICIT inputs — shared by the
-    * registered query and DevStress's ×N scale probe. `chrome` is the
+    * registered query and `Dev stress`'s ×N scale probe. `chrome` is the
     * per-language boilerplate inventory ((lang, h)); `model` the
     * trained quality classifier (the offline artifacts a production
     * run loads, not retrains). `onStage` fires after each
@@ -988,7 +988,7 @@ object SamplePack extends QueryPack {
     // crawl → curated corpus (doc_id, lang, xt); materialized once.
     // A dir-keyed caller hands in the shared CrawlText.curatedFor
     // artifact (already checkpoint/parquet-backed) instead of
-    // re-running the Warc-parse chain; DevStress's replicated corpora
+    // re-running the Warc-parse chain; `Dev stress`'s replicated corpora
     // have no dir key and take the inline build.
     val cur = timed("extract")(preCurated.getOrElse(
       CrawlText.curatedTextWithChrome(

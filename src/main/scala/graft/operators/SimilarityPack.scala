@@ -40,7 +40,7 @@ object SimilarityPack extends QueryPack {
     Tables.embeddings(s, dir)
 
   /** (vec_id, band, bucket) LSH bucket assignments of an embedding
-    * frame — scan stage, zero shuffle. Public so DevStress probes the
+    * frame — scan stage, zero shuffle. Public so `Dev stress` probes the
     * exact production stage, not a re-implementation. Null embeddings
     * are excluded explicitly — lshBucket's per-plane when/otherwise
     * would otherwise map them all to bucket 0 (a degenerate mega-
@@ -287,7 +287,7 @@ object SimilarityPack extends QueryPack {
     * the union), so un-truncated lineage re-executes 5^rounds copies
     * of the seed — the first cut of this operator measured 19.9 s on
     * 2 000 vectors from exactly that; this form probes 5.4 s at x1
-    * and 15.6 s at x16 (the DevStress knn_graph row). */
+    * and 15.6 s at x16 (the `Dev stress` knn_graph row). */
   def knnGraphOver(vRaw: DataFrame, buildK: Int = KnnBuildK,
                    rounds: Int = KnnRounds): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -400,7 +400,7 @@ object SimilarityPack extends QueryPack {
         .localCheckpoint(eager = true))
 
   /** The search loop over a prepared (vec_id, embedding, nrm) frame —
-    * public so DevStress probes the production stages. `prebuilt`
+    * public so `Dev stress` probes the production stages. `prebuilt`
     * supplies an already-checkpointed graph (the memoized index);
     * absent, the graph builds here (the full-path probe shape). */
   def knnSearchOver(vRaw: DataFrame,

@@ -70,7 +70,7 @@ object SketchPack extends QueryPack {
   private def cmsKeyHash: Column = Hashing.h32(col("user_id").cast("string"))
 
   /** CMS frame (r, c, cnt) over any (user_id) frame — ≤ D·W rows at
-    * ANY input size (the DevStress probe surface). The groupBy
+    * ANY input size (the `Dev stress` probe surface). The groupBy
     * combines map-side, so the exchange carries ≤ D·W rows per
     * partition however many events scanned. */
   def cmsSketch(ev: DataFrame): DataFrame =
@@ -129,7 +129,7 @@ object SketchPack extends QueryPack {
 
   /** Per-source sketch + estimate over any documents-shaped frame
     * (the q_kmv_distinct body without the exact-count audit join) —
-    * the DevStress probe surface. */
+    * the `Dev stress` probe surface. */
   def kmvSketch(docs: DataFrame): DataFrame =
     kmvKeep(items(docs)).groupBy("source")
       .agg(max(col("ih")).as("kth"),
@@ -137,7 +137,7 @@ object SketchPack extends QueryPack {
       .select(col("source"), col("kth"), col("n_kept"), estCol.as("est"))
 
   /** Per-source MinHash signatures over any documents-shaped frame
-    * (one map-side-combined agg) — the DevStress probe surface. */
+    * (one map-side-combined agg) — the `Dev stress` probe surface. */
   def sigOf(docs: DataFrame): DataFrame = sigOfItems(items(docs))
 
   /** Signature agg over an already-built (source, ih) items frame —

@@ -160,7 +160,7 @@ object TextPack extends QueryPack {
     modelFromDgl(Tables.documents(s, dir), dglFor(s, dir))
 
   /** The tx_langid body over any documents frame — public so
-    * DevStress probes the production stages at replicated scale. */
+    * `Dev stress` probes the production stages at replicated scale. */
   def langIdOver(docs: DataFrame): DataFrame =
     langIdOverDgl(docs, dglOf(docs))
 

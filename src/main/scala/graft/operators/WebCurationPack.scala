@@ -337,7 +337,7 @@ object WebCurationPack extends QueryPack {
           graft.sources.Warc.htmlResponseArchives(docs)).toDF())
     }))
 
-  /** The wc_frontier body over any canon frame — public so DevStress
+  /** The wc_frontier body over any canon frame — public so `Dev stress`
     * probes the production stages. `edges` supplies the prebuilt
     * link-graph artifact ([[LinkOps.linkGraphFor]]); absent, the
     * graph builds here (the full-path probe shape). */

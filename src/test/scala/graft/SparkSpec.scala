@@ -14,26 +14,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   lazy val session: SparkSession = build()
 
-  /** A local session with the specs' settings (getOrCreate: a new
-    * one only when no live session exists). */
-  def build(): SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // as labelbench does: one streaming run of IftStream compiles
-      // about 110 classes (each once on the driver and once on the
-      // executors, under different class loaders), more than the
-      // default cache of 100 holds, so a later run would find none of
-      // its classes cached
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The harness session, 4 wide, with the specs' own warehouse dir
+    * and app name (getOrCreate: a new one only when no live session
+    * exists). */
+  def build(): SparkSession = Harness.session(cpus = 4, confs = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }

@@ -133,7 +133,7 @@ class DupSpansSpec extends SparkSpec {
   }
 
   test("mega-component: one boilerplate sentence across every doc excises exactly (N-1) copies") {
-    // the DevStress dup_spans_*_mega probe's correctness half, exact
+    // the `Dev stress` dup_spans_*_mega probe's correctness half, exact
     // at small scale: 200 docs share ONE 16-token boilerplate tail,
     // natural tokens salted per-doc so the boiler grams are the only
     // seeds. Lowest (doc_id, pos) wins → doc 0 keeps its copy; every

@@ -140,8 +140,13 @@ class IndexCacheSpec extends SparkSpec {
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)
       java.nio.file.Files.write(f.toPath, bytes.take(bytes.length / 2))
       IndexCache.clear()
-      get("/corpus/a")
+      val errBuf = new java.io.ByteArrayOutputStream()
+      val err = System.err
+      System.setErr(new java.io.PrintStream(errBuf, true))
+      try get("/corpus/a") finally System.setErr(err)
       assert(trainings == 2, "a torn envelope must retrain, not serve garbage")
+      assert(errBuf.toString.contains("EOFException"),
+        s"the warning must name the cause: $errBuf")
       // a DIFFERENT corpus never reads this envelope (dir is stamped
       // inside and checked, beyond the filename hash)
       IndexCache.clear()
