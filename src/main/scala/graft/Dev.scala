@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{DedupPack, QueryLayerPack, SimilarityPack}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev instruments, one main over the [[Harness]] session, reading
@@ -51,6 +51,15 @@ object Dev {
     try cmd(spark, Harness.sfDir) finally spark.stop()
   }
 
+  /** A stage by the operators it ran, upstream first: adaptive
+    * execution submits its stages from its own futures, so most stage
+    * names are one `CompletableFuture` call site. */
+  private def stageName(info: StageInfo): String = {
+    val scopes = GraftShim.stageScopes(info)
+    (if (scopes.nonEmpty) scopes.mkString(" > ")
+     else info.name.takeWhile(_ != '\n')).take(120)
+  }
+
   /** Sums the task metrics of everything that runs while attached. */
   private class TaskSums extends SparkListener {
     var jobs, stages, tasks = 0L
@@ -63,8 +72,7 @@ object Dev {
       synchronized {
         stages += 1
         val (_, n, ms) = perStage.getOrElse(s.stageInfo.stageId, ("", 0L, 0L))
-        perStage(s.stageInfo.stageId) =
-          (s.stageInfo.name.takeWhile(_ != '\n').take(90), n, ms)
+        perStage(s.stageInfo.stageId) = (stageName(s.stageInfo), n, ms)
       }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
       tasks += 1

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -21,21 +23,32 @@ object Harness {
     * only when no live session exists). `confs` adds to the shape. */
   def session(cpus: Int = Harness.cpus,
               confs: Map[String, String] = Map.empty): SparkSession = {
-    val s = SparkSession.builder()
+    warnOnly()
+    SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // one streaming run of IftStream compiles about 110 classes (each
-      // once on the driver and once on the executors, under different
-      // class loaders), more than the default cache of 100 holds, so a
-      // later run would find none of its classes cached
+      // a generated class is compiled once on the driver and once on
+      // the executors, under different class loaders: one cold run of
+      // UrlStream.startAdmittedCuration fills 76 entries of the default
+      // cache of 100, so any query run between two of its batches
+      // would evict the classes the next batch reuses
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .config(confs)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  }
+
+  /** Loads Spark's default log profile, which logs INFO, and lowers it
+    * to WARN before a context starts, so no main prints the start-up
+    * INFO lines that a started context's `setLogLevel` comes too late
+    * for. */
+  private def warnOnly(): Unit = {
+    new org.apache.spark.internal.Logging {
+      initializeLogIfNecessary(false, silent = true)
+    }
+    Configurator.setRootLevel(Level.WARN)
   }
 
   /** Pays the scheduler, parquet reader and first-shuffle first-touch

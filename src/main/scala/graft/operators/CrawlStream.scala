@@ -1,7 +1,7 @@
-package graft.streaming
+package graft.operators
 
-import graft.operators.CrawlText
 import graft.sources.Warc
+import graft.streaming.{LabelStream, SinkFs}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -25,9 +25,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Write discipline: per-batch `ingest_batch=<id>` directory with
   * overwrite + the committer's `_SUCCESS` marker as the durable
-  * applied signal ([[BronzeParquetSink]]'s contract) — a replayed
-  * batch rewrites its own directory byte-identically instead of
-  * appending duplicates.
+  * applied signal ([[graft.streaming.BronzeParquetSink]]'s contract)
+  * — a replayed batch rewrites its own directory byte-identically
+  * instead of appending duplicates.
   */
 object CrawlStream {
 

@@ -126,7 +126,7 @@ object CrawlText {
     * corpus-level artifact trained offline (like [[IndexCache]]'s
     * centroids), then applied to any slice — a later crawl wave, a
     * single archive, a micro-batch
-    * ([[graft.streaming.CrawlStream]]). */
+    * ([[CrawlStream]]). */
   def curatedWithChrome(pages: DataFrame, chrome: DataFrame): DataFrame =
     fingerprint(curatedTextWithChrome(pages, chrome))
 
@@ -195,7 +195,7 @@ object CrawlText {
 
   /** The curated corpus keyed by PREDICTED language — (doc_id, lang,
     * xt) where `lang` is what the trained NB language-ID
-    * ([[TextPack.predictLangOver]], the tx_langid model) assigns to
+    * ([[TextPack.predictLangWithModel]], the tx_langid model) assigns to
     * each page's pre-chrome text, never the page's own declared
     * attribute. This is the production form of the pipeline: at
     * crawl scale there are no gold labels — CCNet runs fastText

@@ -63,7 +63,7 @@ object MergePack extends QueryPack {
         // array into ONE canonical scalar ("name|src;name|src;…").
         // The array_union-on-structs semantics stay fully pinned: the
         // encoding is order-preserving and lossless for this data, and
-        // the raw array form remains under MergeSpec/TypedLabelsSpec.
+        // the raw array form remains under MergeSpec.
         // Serial.noSep: a name/src that ever contained '|' or ';'
         // would make two different arrays encode identically — fail
         // loudly instead of letting the oracle falsely match.

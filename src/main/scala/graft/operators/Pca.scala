@@ -271,11 +271,6 @@ object Pca {
        |${sqlSignFix(Iters, q)}""".stripMargin
   }
 
-  /** The whole TOP-1 chain (prelude → T rounds → sign fix) under one
-    * CTE prefix — yields `{p}vec(dim, v)`. */
-  def sqlChain(embSql: String, d: Int, p: String = ""): String =
-    sqlChainK(embSql, d, 1, p)
-
   /** The TOP-K chain: prelude, then per component c the power loop on
     * `{p}k{c}gsym` and (for c < k−1) the deflation to the next
     * matrix. Yields `{p}vecs(component, dim, v)` over all components

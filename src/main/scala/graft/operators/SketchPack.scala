@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Det, QueryPack, Tables}
 import graft.functions.Hashing
+import graft.streaming.CmsStats.{CmsDepth, CmsWidth}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,16 +47,6 @@ object SketchPack extends QueryPack {
     * the exact n<K branch while the corpus union (≈350+) exercises
     * the estimator — both branches oracled at every SF. */
   val K = 64
-
-  /** Count-min sketch shape (Cormode & Muthukrishnan, J. Algorithms
-    * 2005): [[CmsDepth]] independent hash rows × [[CmsWidth]] counters.
-    * W=512 puts the sf0.1 key inventory (1,500 user ids) well past the
-    * collision point so the min-over-rows estimator is genuinely
-    * exercised, while sf0.001's 15 keys land collision-free — both
-    * regimes oracled. Every counter is an integer event count, so the
-    * ESTIMATES replay bit-identically in DuckDB (the KMV argument). */
-  val CmsDepth = 4
-  val CmsWidth = 512
 
   /** Heavy keys audited by q_cms_freq: the exact top-N frequent ids. */
   val CmsProbes = 20

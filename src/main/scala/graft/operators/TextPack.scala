@@ -175,7 +175,7 @@ object TextPack extends QueryPack {
   }
 
   /** Language prediction for arbitrary (`idCol`, text) rows from an
-    * NB model trained on the LABELED `train` corpus — the production
+    * NB model trained on a LABELED corpus — the production
     * split the corpus pipeline needs: real crawl data carries no
     * gold labels, so per-language processing (chrome inventories,
     * mixing strata) keys on what a model trained offline PREDICTS
@@ -184,14 +184,10 @@ object TextPack extends QueryPack {
     * minus the per-doc grain (pure (lang, bucket) aggregation);
     * scoring is one broadcast grid join + an integer argmax. Rows
     * whose grams all miss the training vocabulary carry no evidence
-    * and drop (the inner grid join, mirrored in the oracles). */
-  def predictLangOver(train: DataFrame, texts: DataFrame,
-                      idCol: String): DataFrame =
-    predictLangWithModel(trainedModel(train), texts, idCol)
-
-  /** [[predictLangOver]] against an ALREADY-TRAINED (grid, prior) —
-    * the artifact path ([[modelFor]]): consumers broadcast the
-    * bounded model instead of retraining per query. */
+    * and drop (the inner grid join, mirrored in the oracles). The
+    * model is ALREADY TRAINED (grid, prior) — the artifact path
+    * ([[modelFor]]): consumers broadcast the bounded model instead of
+    * retraining per query. */
   def predictLangWithModel(model: (DataFrame, DataFrame),
                            texts: DataFrame, idCol: String): DataFrame = {
     val (grid, prior) = model
@@ -229,10 +225,7 @@ object TextPack extends QueryPack {
     * to a language the model never trained on; below
     * [[LangIdUndMargin]] the honest answer is "undetermined" (the
     * fastText-pipeline threshold discipline). Output: (doc_id, lang,
-    * pred_lang ∈ langs ∪ {und}, margin). */
-  def langIdMarginOver(docs: DataFrame): DataFrame =
-    langIdMarginOverDgl(docs, dglOf(docs))
-
+    * pred_lang ∈ langs ∪ {und}, margin), over the docs' grams `dgl`. */
   private[operators] def langIdMarginOverDgl(docs: DataFrame,
                                              dgl: DataFrame): DataFrame = {
     val dg = dgl.select(col("doc_id"), col("g"), col("c"))

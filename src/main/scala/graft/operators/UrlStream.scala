@@ -1,13 +1,13 @@
-package graft.streaming
+package graft.operators
 
-import graft.operators.UrlOps
 import graft.sources.Warc
+import graft.streaming.{BloomSeenSet, LabelStream, SinkFs}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming URL admission — the crawl front-end
-  * ([[graft.operators.UrlOps]], `wc_front_e2e`) run CONTINUOUSLY over
+  * ([[UrlOps]], `wc_front_e2e`) run CONTINUOUSLY over
   * a growing archive directory: a crawler re-fetches the same page
   * under many spellings across waves, and admission = "first crawl of
   * each CANONICAL url wins" must hold across micro-batches and
@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * — definitely-new canonicals pass with zero history I/O, the ~fpp
   * sliver takes the exact anti-join, and the committed sketch
   * survives restarts beside the checkpoint (one history scan per
-  * deployment lifetime, the [[SeenSet]] discipline).
+  * deployment lifetime, the [[graft.streaming.SeenSet]] discipline).
   *
   * Write discipline: per-batch `ingest_batch=<id>` directory,
   * overwrite + `_SUCCESS` as the durable applied signal. The history
@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * directories — a crashed batch's partial directory must not count
   * as "seen", or its replay would filter itself to empty and
   * overwrite the partial dir with nothing (the replay-erasure shape
-  * [[KeyedSink.alreadyApplied]] guards against). A batch whose
+  * [[graft.streaming.KeyedSink.alreadyApplied]] guards against). A batch whose
   * `_SUCCESS` exists is a checkpoint-commit replay: the store
   * already has it, so the body is skipped and its keys re-fold into
   * the sketch (idempotent).
@@ -91,7 +91,7 @@ object UrlStream {
 
   /** The fetch LOG the admitted store doubles as: (canonical,
     * fetched_at DATE) for every admitted first crawl — the real
-    * table [[graft.operators.WebCurationPack.recrawlDue]] compares
+    * table [[WebCurationPack.recrawlDue]] compares
     * sitemap lastmod claims against (wc_recrawl's batch fixture
     * plants the same shape through the IndexCache envelope). One
     * store, two read surfaces: admission history for the seen-set's
@@ -111,7 +111,7 @@ object UrlStream {
     * keeps its first record per canonical, cross-batch admission
     * runs through the persisted sketch (the [[startAdmission]]
     * discipline verbatim), and ONLY the admitted records' HTTP
-    * bodies flow into [[graft.operators.CrawlText]]'s chrome-curated
+    * bodies flow into [[CrawlText]]'s chrome-curated
     * extraction. The curated store carries (canonical, url) beside
     * the text fingerprint, so the admitted history IS the curated
     * store — no second bookkeeping table, and the `_SUCCESS`-replay /
@@ -125,7 +125,7 @@ object UrlStream {
   /** `frontierDir`, when set, turns on CONTINUOUS DISCOVERY: per
     * batch, hrefs are extracted from the ADMITTED pages' real fetched
     * bodies, resolved against each page's canonical base (RFC 3986 —
-    * [[graft.operators.LinkOps.resolve]]), canonicalized through the
+    * [[LinkOps.resolve]]), canonicalized through the
     * same chain as crawled URLs, and written minus everything already
     * admitted — the crawler's next-fetch candidates, under the same
     * `ingest_batch=<id>`/`_SUCCESS` replay discipline as the store.
@@ -177,7 +177,7 @@ object UrlStream {
           if (SinkFs.list(dir).exists(_.getPath.getName.endsWith(".parquet")))
             seen.commit(spark.read.parquet(dir).select(col("canonical")))
         } else {
-          val canon = graft.operators.UrlOps
+          val canon = UrlOps
             .withUrlParts(batch, col("url"))
             .select(col("source"), col("doc_id"), col("url"),
               col("canonical"), col("status"), col("content_type"),
@@ -202,7 +202,7 @@ object UrlStream {
               // admission history the sketch's fpp sliver anti-joins,
               // and the two must never diverge
               fresh.join(
-                  graft.operators.CrawlText.curatedWithChrome(
+                  CrawlText.curatedWithChrome(
                     pages, chromeDf),
                   Seq("doc_id"), "left")
                 .select(col("canonical"), col("doc_id"), col("url"),
@@ -240,10 +240,10 @@ object UrlStream {
                     col("body").cast("string"),
                     lit("href=\"([^\"]+)\""), lit(1))).as("href"))
               val web = hrefs
-                .select(graft.operators.LinkOps
+                .select(LinkOps
                   .resolve(col("base"), col("href")).as("url"))
                 .filter(col("url").rlike("^https?://"))
-              graft.operators.UrlOps.withUrlParts(web, col("url"))
+              UrlOps.withUrlParts(web, col("url"))
                 .select(col("canonical").as("dst"), col("domain"))
                 .distinct()
                 .join(admitted(spark, outDir)

@@ -286,7 +286,7 @@ object WebCurationPack extends QueryPack {
     // TABLE here ([[fetchLogFor]]: planted once beside the corpus
     // through the IndexCache parquet envelope, the form the
     // streaming admission path writes —
-    // [[graft.streaming.UrlStream]] stamps fetched_at on every
+    // [[UrlStream]] stamps fetched_at on every
     // admitted store row), not an in-query date synthesis. The h%6
     // cohort is fetched ON the year-end lastmod date, pinning the
     // strict inequality at the boundary. The sitemap side is
@@ -419,7 +419,7 @@ object WebCurationPack extends QueryPack {
     * fetched_at) parquet table planted once beside the corpus
     * through the [[IndexCache.frame]] envelope and SCANNED by every
     * consumer, exactly the shape the streaming admission path
-    * writes into its store ([[graft.streaming.UrlStream]]'s
+    * writes into its store ([[UrlStream]]'s
     * fetched_at column). The batch fixture's writer is [[crawlLog]];
     * wc_recrawl's oracle replays the writer's date arithmetic, the
     * comparison itself reads the table. */

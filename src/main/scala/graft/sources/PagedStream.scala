@@ -108,27 +108,7 @@ class RegistryPageFetcher extends PageFetcher {
   * shared store on a cluster). A short listing inside a committed
   * range FAILS loudly — committed offsets must never skip pages. */
 class DirectoryPageFetcher extends PageFetcher {
-  import DirectoryPageFetcher.ManifestName
-
-  /** Cursor parsed from a page filename, None for strays. STRICT: the
-    * entire basename (minus one extension) after `page-` must be
-    * numeric — a prefix parse would map `page-12.html` and
-    * `page-12old.html` to the SAME cursor 12, breaking the
-    * unique/monotone-cursor contract the stream and downstream
-    * cursor-keyed dedup rely on. `page-12old` is a stray (ignored);
-    * a genuine duplicate (`page-12.html` + `page-12.txt`) fails
-    * loudly in [[pages]]. toLongOption: digits that overflow Long are
-    * a stray, not a feed-killing NumberFormatException. */
-  private def parseCursor(name: String): Option[Long] =
-    if (!name.startsWith("page-")) None
-    else {
-      val stem = name.stripPrefix("page-")
-      val base = stem.lastIndexOf('.') match {
-        case -1 => stem
-        case i => stem.substring(0, i)
-      }
-      if (base.nonEmpty && base.forall(_.isDigit)) base.toLongOption else None
-    }
+  import DirectoryPageFetcher.{ManifestName, parseCursor}
 
   /** (cursor, file), sorted NUMERICALLY by the parsed cursor — a
     * lexicographic filename sort would reorder unpadded cursors
@@ -226,23 +206,34 @@ object DirectoryPageFetcher {
     * from per-task directory listing to one-small-file reads. */
   val ManifestName = "_manifest"
 
+  /** Cursor parsed from a page filename, None for strays. STRICT: the
+    * entire basename (minus one extension) after `page-` must be
+    * numeric — a prefix parse would map `page-12.html` and
+    * `page-12old.html` to the SAME cursor 12, breaking the
+    * unique/monotone-cursor contract the stream and downstream
+    * cursor-keyed dedup rely on. `page-12old` is a stray (ignored);
+    * a genuine duplicate (`page-12.html` + `page-12.txt`) fails
+    * loudly in `pages`. toLongOption: digits that overflow Long are
+    * a stray, not a feed-killing NumberFormatException. */
+  private def parseCursor(name: String): Option[Long] =
+    if (!name.startsWith("page-")) None
+    else {
+      val stem = name.stripPrefix("page-")
+      val base = stem.lastIndexOf('.') match {
+        case -1 => stem
+        case i => stem.substring(0, i)
+      }
+      if (base.nonEmpty && base.forall(_.isDigit)) base.toLongOption else None
+    }
+
   /** Write the manifest for `feed` from its current listing — what a
     * spooler calls after appending pages (atomic rename so readers
     * never see a torn manifest). */
   def writeManifest(feed: String): Unit = {
     val names = Option(new java.io.File(feed).listFiles())
       .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.startsWith("page-"))
-      .flatMap { f =>
-        val stem = f.getName.stripPrefix("page-")
-        val base = stem.lastIndexOf('.') match {
-          case -1 => stem
-          case i => stem.substring(0, i)
-        }
-        if (base.nonEmpty && base.forall(_.isDigit))
-          base.toLongOption.map((_, f.getName))
-        else None
-      }
+      .filter(_.isFile)
+      .flatMap(f => parseCursor(f.getName).map((_, f.getName)))
       .sortBy(_._1).map(_._2)
     val tmp = java.nio.file.Files.createTempFile(
       java.nio.file.Paths.get(feed), "_manifest", ".tmp")
@@ -284,57 +275,41 @@ class PagedTableProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val maxPages = Option(opts.get("maxPagesPerTrigger")).map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"option 'maxPagesPerTrigger' must be a positive integer, got '$v'")
-      }
-      // 0 would make AvailableNow terminate 'successfully' having read
-      // nothing; a negative cap would move offsets BACKWARD — fail fast
-      require(n > 0,
-        s"option 'maxPagesPerTrigger' must be positive, got $n")
-      n
-    }
+    // 0 would make AvailableNow terminate 'successfully' having read
+    // nothing; a negative cap would move offsets BACKWARD — fail fast
+    val maxPages = intOption(opts, "maxPagesPerTrigger", min = 1)
     val baseFetcher = Option(opts.get("fetcher"))
       .getOrElse(classOf[RegistryPageFetcher].getName)
     // transient-failure policy (I3): >0 retries compile the fetcher
     // into its retry-decorated spec, carried like any class name
-    val retries = Option(opts.get("fetcherRetries")).map { v =>
-      val n = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"option 'fetcherRetries' must be a non-negative integer, got '$v'")
-      }
-      require(n >= 0, s"option 'fetcherRetries' must be >= 0, got $n")
-      n
-    }.getOrElse(0)
-    val retryMillis = Option(opts.get("fetcherRetryMillis")).map { v =>
-      val n = try v.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"option 'fetcherRetryMillis' must be a non-negative integer, got '$v'")
-      }
-      require(n >= 0, s"option 'fetcherRetryMillis' must be >= 0, got $n")
-      n
-    }.getOrElse(1000L)
+    val retries = intOption(opts, "fetcherRetries", min = 0, max = Int.MaxValue)
+      .getOrElse(0L)
+    val retryMillis = intOption(opts, "fetcherRetryMillis", min = 0).getOrElse(1000L)
     val fetcherClass =
       if (retries > 0) s"retry:$retries:$retryMillis:$baseFetcher"
       else baseFetcher
     // fail at load() time, not in a task: a typo'd class name must not
     // surface as N executor-side ClassNotFoundExceptions
     PageFetcher.instantiate(fetcherClass)
-    val pagesPerPartition = Option(opts.get("pagesPerPartition"))
-      .map { v =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"option 'pagesPerPartition' must be a positive integer, got '$v'")
-        }
-        require(n > 0, s"option 'pagesPerPartition' must be positive, got $n")
-        n
-      }.getOrElse(1L)
+    val pagesPerPartition = intOption(opts, "pagesPerPartition", min = 1).getOrElse(1L)
     new PagedTable(
       Option(opts.get("feed")).getOrElse(
         throw new IllegalArgumentException("option 'feed' is required")),
       maxPages, fetcherClass, pagesPerPartition)
   }
+
+  /** Option `name` as an integer in [`min`, `max`] (`min` is 0 or 1),
+    * or None when it is unset; every error names the option. */
+  private def intOption(opts: CaseInsensitiveStringMap, name: String, min: Long,
+                        max: Long = Long.MaxValue): Option[Long] =
+    Option(opts.get(name)).map { v =>
+      val n = v.toLongOption.filter(_ <= max).getOrElse(
+        throw new IllegalArgumentException(s"option '$name' must be " +
+          s"${if (min > 0) "a positive" else "a non-negative"} integer, got '$v'"))
+      require(n >= min, s"option '$name' must be " +
+        s"${if (min > 0) "positive" else ">= 0"}, got $n")
+      n
+    }
 }
 
 object PagedTable {

@@ -88,19 +88,6 @@ object Warc {
   def isGzip(b: Array[Byte]): Boolean =
     b.length >= 2 && b(0) == 0x1f.toByte && b(1) == 0x8b.toByte
 
-  /** Decompress a (possibly multi-member) gzip stream fully —
-    * a TEST convenience (specs compare whole small archives); the
-    * production walk ([[records]]) streams and never holds a full
-    * decompressed archive. */
-  def gunzipAll(blob: Array[Byte]): Array[Byte] = {
-    val in = new GZIPInputStream(new ByteArrayInputStream(blob))
-    val out = new ByteArrayOutputStream(blob.length * 3 + 64)
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
   /** Byte cursor over a record stream: single-byte peek/read for the
     * header walk, bulk read for payloads, and a running DECOMPRESSED
     * offset for loud errors. */

@@ -40,7 +40,6 @@ import org.apache.spark.sql.functions._
   * add. A torn envelope resets loudly to empty.
   */
 final class CmsStats(persistPath: Option[String] = None) {
-  import graft.operators.SketchPack.{CmsDepth, CmsWidth}
   import CmsStats._
 
   /** Tracked heavy-hitter keys on the published board. */
@@ -232,7 +231,7 @@ final class CmsStats(persistPath: Option[String] = None) {
         case e: Exception =>
           System.err.println(
             s"CmsStats: rejecting persisted state at $p " +
-              s"(${e.getMessage}); starting empty — estimates cover " +
+              s"($e); starting empty — estimates cover " +
               "only post-reset batches until a history replay")
           None
       } finally in.close()
@@ -241,6 +240,18 @@ final class CmsStats(persistPath: Option[String] = None) {
 }
 
 object CmsStats {
+  /** Count-min sketch shape (Cormode & Muthukrishnan, J. Algorithms
+    * 2005): [[CmsDepth]] independent hash rows × [[CmsWidth]] counters,
+    * shared with the batch queries `q_cms_freq` and `q_cms_merge`
+    * ([[graft.operators.SketchPack]]).
+    * W=512 puts the sf0.1 key inventory (1,500 user ids) well past the
+    * collision point so the min-over-rows estimator is genuinely
+    * exercised, while sf0.001's 15 keys land collision-free — both
+    * regimes oracled. Every counter is an integer event count, so the
+    * ESTIMATES replay bit-identically in DuckDB (the KMV argument). */
+  val CmsDepth = 4
+  val CmsWidth = 512
+
   private val Magic = 0x434D5331 // "CMS1"
   private val Version = 2 // v2: MG candidate summary in the envelope
 

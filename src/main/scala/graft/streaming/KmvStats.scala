@@ -160,7 +160,7 @@ final class KmvStats(k: Int = 64, persistPath: Option[String] = None) {
         case e: Exception =>
           System.err.println(
             s"KmvStats: rejecting persisted state at $p " +
-              s"(${e.getMessage}); starting empty — estimates cover " +
+              s"($e); starting empty — estimates cover " +
               "only post-reset batches until a history replay")
           None
       } finally in.close()

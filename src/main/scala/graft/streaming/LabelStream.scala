@@ -63,15 +63,6 @@ object LabelStream {
       .groupBy(window(col(eventTime), width), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-  /** Session windows per user (gap-merged activity bursts) —
-    * watermarked for the same state-bound reason as
-    * [[tumblingCounts]]. */
-  def sessionCounts(df: DataFrame, eventTime: String, gap: String,
-                    delay: String = "1 hour"): DataFrame =
-    df.withWatermark(eventTime, delay)
-      .groupBy(session_window(col(eventTime), gap), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-
   /** Start the ingest: watermarked dedup → keyed sink via
     * foreachBatch, AvailableNow trigger (the reference's "catch up,
     * then stop until next tick"). The sink is pluggable

@@ -64,7 +64,7 @@ final class BloomSeenSet(key: String, expectedKeys: Long,
           // is identical semantics at one-history-scan cost
           System.err.println(
             s"BloomSeenSet: rejecting persisted sketch at $p " +
-              s"(${e.getMessage}); rebuilding from history")
+              s"($e); rebuilding from history")
           None
       } finally in.close()
     }

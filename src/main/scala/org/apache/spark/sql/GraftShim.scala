@@ -27,4 +27,10 @@ object GraftShim {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The operator scopes of a stage's RDDs (`Exchange`,
+    * `WholeStageCodegen (3)`, ...), upstream first; the scope type is
+    * `private[spark]`. */
+  def stageScopes(info: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    info.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim)).distinct
 }

@@ -1,10 +1,10 @@
-package graft.streaming
+package graft.operators
 
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
-import graft.operators.CrawlText
 import graft.sources.Warc
+import graft.streaming.Compiles
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

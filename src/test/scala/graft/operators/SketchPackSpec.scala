@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.CmsStats
 
 /** Pins the mergeable-sketch family against an independent
   * plain-Scala reimplementation (JDK MessageDigest md5, scala
@@ -125,13 +126,13 @@ class SketchPackSpec extends SparkSpec {
       : (Map[(Int, Long), Long], Long => Long) = {
     val cells = freq.toSeq.flatMap { case (uid, n) =>
       val h = h32(uid.toString)
-      (0 until SketchPack.CmsDepth).map(i =>
-        ((i, perm(h, i) % SketchPack.CmsWidth), n))
+      (0 until CmsStats.CmsDepth).map(i =>
+        ((i, perm(h, i) % CmsStats.CmsWidth), n))
     }.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._2).sum }
     val est = (uid: Long) => {
       val h = h32(uid.toString)
-      (0 until SketchPack.CmsDepth)
-        .map(i => cells((i, perm(h, i) % SketchPack.CmsWidth))).min
+      (0 until CmsStats.CmsDepth)
+        .map(i => cells((i, perm(h, i) % CmsStats.CmsWidth))).min
     }
     (cells, est)
   }
@@ -169,7 +170,7 @@ class SketchPackSpec extends SparkSpec {
     val sketch = SketchPack.cmsSketch(ev).collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
     assert(sketch == cells)
-    assert(sketch.size <= SketchPack.CmsDepth * SketchPack.CmsWidth,
+    assert(sketch.size <= CmsStats.CmsDepth * CmsStats.CmsWidth,
       "cell inventory must be bounded by D*W at any key count")
     val ests = freq.keys.map(est)
     assert(ests.forall(_ >= 2L), "CMS must never undercount")
@@ -182,7 +183,7 @@ class SketchPackSpec extends SparkSpec {
     assert(row.getBoolean(3), "merged_eq_direct must hold")
     assert(row.getBoolean(4), "total mass must be preserved")
     val nEvents = graft.Tables.events(spark, sfDir).count()
-    assert(row.getLong(1) == SketchPack.CmsDepth * nEvents,
+    assert(row.getLong(1) == CmsStats.CmsDepth * nEvents,
       "sketch mass must be D rows per event")
   }
 }

@@ -1,9 +1,10 @@
-package graft.streaming
+package graft.operators
 
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.sources.Warc
+import graft.streaming.{BloomSeenSet, Compiles}
 import org.apache.spark.sql.functions.col
 
 /** The streaming URL-admission contract: canonical variants collapse
@@ -131,7 +132,7 @@ class UrlStreamSpec extends SparkSpec {
     val recs = pages.map(p => (p.id, p.uri, p.status, "text/html",
         (if (p.status == 200) htmlOf(p) else "").getBytes("UTF-8")))
       .toDF("doc_id", "url", "status", "content_type", "body")
-    val canon = graft.operators.UrlOps.withUrlParts(recs,
+    val canon = UrlOps.withUrlParts(recs,
       org.apache.spark.sql.functions.col("url"))
     import org.apache.spark.sql.functions._
     val firsts = canon.groupBy(col("canonical"))
@@ -141,7 +142,7 @@ class UrlStreamSpec extends SparkSpec {
     val kept = canon.join(firsts.select(col("doc_id")),
       Seq("doc_id"), "left_semi")
     firsts.join(
-        graft.operators.CrawlText.curatedWithChrome(kept, emptyChrome),
+        CrawlText.curatedWithChrome(kept, emptyChrome),
         Seq("doc_id"), "left")
       .select(col("canonical"), col("doc_id"), col("url"), col("lang"),
         col("n_chars"), col("text_md5"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * envelope, and torn envelopes reset loudly. */
 class CmsStatsSpec extends SparkSpec {
 
-  import graft.operators.SketchPack.{CmsDepth, CmsWidth}
+  import CmsStats.{CmsDepth, CmsWidth}
 
   private def frame(rows: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -141,6 +141,10 @@ class CmsStatsSpec extends SparkSpec {
       bytes.take(bytes.length / 2))
     val t = new CmsStats(Some(p))
     assert(t.snapshot.flatten.forall(_ == 0L) && t.total == 0L)
+    val warning = TornEnvelope.warningWithoutSidecar(p) {
+      assert(new CmsStats(Some(p)).total == 0L)
+    }
+    assert(warning.contains("EOFException"), s"the warning must name the cause: $warning")
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       Array.fill[Byte](64)(7))
     val g = new CmsStats(Some(p))

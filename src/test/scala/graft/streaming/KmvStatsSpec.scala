@@ -99,6 +99,10 @@ class KmvStatsSpec extends SparkSpec {
       bytes.take(bytes.length / 2))
     val t = new KmvStats(16, Some(p))
     assert(t.snapshot.isEmpty)
+    val warning = TornEnvelope.warningWithoutSidecar(p) {
+      assert(new KmvStats(16, Some(p)).snapshot.isEmpty)
+    }
+    assert(warning.contains("EOFException"), s"the warning must name the cause: $warning")
     // garbage magic
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       Array.fill[Byte](64)(7))

@@ -136,6 +136,13 @@ class SeenSetSpec extends SparkSpec {
     // the rebuilt sketch is re-persisted in the CURRENT envelope
     val in = new java.io.FileInputStream(sketchPath)
     try graft.operators.RuntimeFilter.loadSketch(in) finally in.close()
+    // a torn envelope: truncated past its header
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(sketchPath))
+    Files.write(java.nio.file.Paths.get(sketchPath), bytes.take(bytes.length / 2))
+    val warning = TornEnvelope.warningWithoutSidecar(sketchPath) {
+      new BloomSeenSet("k", expectedKeys = 1000, persistPath = Some(sketchPath))
+    }
+    assert(warning.contains("EOFException"), s"the warning must name the cause: $warning")
   }
 
   test("startDedupedIngest wires the seen-set upstream of the sink") {

@@ -273,41 +273,4 @@ class StreamingSpec extends SparkSpec {
       assert(gold == scratch && gold.map(_._1) == Set("a", "b", "c"))
     } finally q.stop()
   }
-
-  test("stream-stream interval join matches the batch range join; out-of-range never matches") {
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val cdf = clicks.toDF().toDF("user_id", "click_ts")
-    val bdf = buys.toDF().toDF("user_id", "buy_ts")
-    val q = StreamJoin.intervalJoin(cdf, bdf, "user_id",
-        "click_ts", "buy_ts", maxDelay = "1 hour", watermarkDelay = "2 hours")
-      .writeStream.format("memory").queryName("attrib_out")
-      .outputMode("append").start()
-    try {
-      val clickRows = Seq(
-        (1L, ts("2024-01-01 10:00:00")),
-        (1L, ts("2024-01-01 12:00:00")),
-        (2L, ts("2024-01-01 10:30:00")))
-      val buyRows = Seq(
-        (1L, ts("2024-01-01 10:40:00")), // within 1 h of click 1
-        (1L, ts("2024-01-01 11:30:00")), // matches NO click (>1 h after 10:00, before 12:00)
-        (2L, ts("2024-01-01 13:00:00")), // >1 h after user 2's click
-        (3L, ts("2024-01-01 10:45:00"))) // no click at all
-      clicks.addData(clickRows: _*)
-      buys.addData(buyRows: _*)
-      q.processAllAvailable()
-      val got = spark.table("attrib_out")
-        .select("user_id", "click_ts", "buy_ts")
-        .as[(Long, Timestamp, Timestamp)].collect().toSet
-      // batch reference: the identical range join over the same rows
-      val batch = clickRows.toDF("user_id", "click_ts")
-        .join(buyRows.toDF("user_id", "buy_ts"), "user_id")
-        .filter($"buy_ts" >= $"click_ts" &&
-          $"buy_ts" <= $"click_ts" + org.apache.spark.sql.functions
-            .expr("INTERVAL 1 hour"))
-        .as[(Long, Timestamp, Timestamp)].collect().toSet
-      assert(got == batch, s"stream $got != batch $batch")
-      assert(got == Set((1L, ts("2024-01-01 10:00:00"), ts("2024-01-01 10:40:00"))))
-    } finally q.stop()
-  }
 }
