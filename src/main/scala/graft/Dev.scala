@@ -666,7 +666,9 @@ object Dev {
         val stored = sink.current(spark).map(_.count()).getOrElse(0L)
         val nVers = Option(new java.io.File(dir).listFiles()).toSeq.flatten
           .count(_.getName.startsWith("v="))
-        println(f"[stress] x$factor%-3d docstore_rotate_b$b%-8d stored $stored%d rows in $nVers versions")
+        val vBytes = Option(new java.io.File(s"$dir/v=$b").listFiles()).toSeq.flatten
+          .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+        println(f"[stress] x$factor%-3d docstore_rotate_b$b%-8d stored $stored%d rows in $nVers versions, v=$b $vBytes%d B")
       }
     }
     // total-order enumeration at width: GlobalIndex over the

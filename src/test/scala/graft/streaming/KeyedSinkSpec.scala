@@ -3,8 +3,15 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.JobCount
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, concat, format_string, lit}
 
 /** The pluggable keyed-sink contract: whole-row upsert semantics,
   * replay idempotency, and the ingest stream routing through an
@@ -136,6 +143,52 @@ class KeyedSinkSpec extends SparkSpec {
     assert(sink.current(spark).get.as[(String, Long, String)].collect().toSet
       == Set(("a", 1L, "x1"), ("b", 1L, "y1")),
       "empty replay on a URI-addressed store erased committed rows")
+  }
+
+  test("versions are written with zstd pages; only low-cardinality columns keep a dictionary") {
+    val dir = Files.createTempDirectory("graft-docstore-enc").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    // k: 40k distinct ids, far past a 64 KB dictionary; v: 5 values
+    sink.upsert(spark.range(40000).select(
+      format_string("report-%08d", col("id")).as("k"), lit(1L).as("ver"),
+      concat(lit("category-"), (col("id") % 5).cast("string")).as("v")), batchId = 0L)
+    val files = SinkFs.list(s"$dir/v=0").map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    val chunks = files.flatMap { path =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      finally reader.close()
+    }
+    def stats(c: String) =
+      chunks.filter(_.getPath.toDotString == c).map(_.getEncodingStats)
+    assert(chunks.map(_.getCodec).toSet == Set(CompressionCodecName.ZSTD))
+    assert(stats("v").nonEmpty && stats("v").forall(s =>
+      s.hasDictionaryEncodedPages && !s.hasNonDictionaryEncodedPages),
+      "a 5-value column must stay dictionary-encoded")
+    assert(stats("k").nonEmpty && stats("k").forall(s =>
+      !s.hasDictionaryPages && !s.hasDictionaryEncodedPages),
+      "a unique-id column must be written plain, without a dictionary")
+  }
+
+  test("a version this sink wrote is read with its schema carried, not inferred") {
+    val dir = Files.createTempDirectory("graft-docstore-schema").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    sink.upsert(Seq(("a", 1L, "x1"), ("b", 1L, "y1")).toDF("k", "ver", "v"), batchId = 0L)
+    sink.upsert(Seq(("a", 2L, "x2")).toDF("k", "ver", "v"), batchId = 1L)
+    val expect = Set(("a", 2L, "x2"), ("b", 1L, "y1"))
+    val (store, jobs) = JobCount.during(spark.sparkContext)(sink.current(spark).get)
+    assert(jobs == 0, s"resolving the version this sink wrote ran $jobs jobs")
+    assert(store.schema == spark.read.parquet(s"$dir/v=1").schema)
+    assert(store.as[(String, Long, String)].collect().toSet == expect)
+    // a second instance did not write v=1: it infers the schema
+    val other = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    val (inferred, inferJobs) =
+      JobCount.during(spark.sparkContext)(other.current(spark).get)
+    assert(inferJobs > 0, "a version written elsewhere must be inferred")
+    assert(inferred.schema == store.schema)
+    assert(inferred.as[(String, Long, String)].collect().toSet == expect)
   }
 
   test("startIngest routes through a swapped-in doc-store sink") {
