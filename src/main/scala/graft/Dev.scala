@@ -328,7 +328,7 @@ object Dev {
       // production wiring, not a re-implementation (DedupPack owns
       // the split rule and key projection)
       val (hist, dupBatch) = DedupPack.incrementalSlices(renamed)
-      val bf = hist.stat.bloomFilter(xxhash64(col("h")), n, 0.01)
+      val bf = graft.operators.RuntimeFilter.keySketch(hist, col("h"), n)
       val probe = graft.plans.BloomMightContainLong.probe(
         xxhash64(col("h")), bf)
       val dupSliver = dupBatch.filter(probe).count()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Bloom runtime filter for shuffle joins — the standard 100 TB move
@@ -45,10 +45,21 @@ object RuntimeFilter {
     * prebuilt sketches to the overloads below (and folding later
     * batches in) MUST build them here: raw `putLong` of key values
     * does not match the probes and silently disables pruning (anti
-    * form: duplicates pass; semi form: rows vanish). */
+    * form: duplicates pass; semi form: rows vanish).
+    *
+    * Empty input: a frame with no rows yields the EMPTY filter of the
+    * same size — it probes false for every key and merges into any
+    * sketch built here with the same `expectedKeys`/`fpp`. So an
+    * empty history or batch needs no guard job before the sketch
+    * (`stat.bloomFilter` instead reads the aggregate's null result and
+    * throws). */
   def keySketch(df: DataFrame, key: Column, expectedKeys: Long,
-                fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
-    df.stat.bloomFilter(xxhash64(key), expectedKeys, fpp)
+                fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
+    val (agg, empty) = GraftShim.bloomFilterAgg(xxhash64(key), expectedKeys,
+      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(expectedKeys, fpp))
+    Option(df.select(agg).head().getAs[Array[Byte]](0))
+      .fold(empty())(org.apache.spark.util.sketch.BloomFilter.readFrom)
+  }
 
   /** Persist a [[keySketch]]-built sketch in a versioned envelope
     * (magic + keying version + the filter's own serialization). */

@@ -107,24 +107,35 @@ object LabelStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (micro: DataFrame, batchId: Long) =>
-        val batch = inSession(micro, source.sparkSession)
-        // Replay guard: a batch whose write landed but whose
-        // checkpoint commit didn't arrives AGAIN, and the dedup
-        // filter would see its own first delivery in the store and
-        // strip the batch to empty — handing the sink an empty
-        // re-upsert that a snapshot-rotating store would apply as an
-        // erasure. Skip the whole body; the sketch re-folds the keys
-        // (idempotent) so a restarted process stays exact.
-        if (sink.alreadyApplied(batchId)) seen.commit(batch)
-        else {
-          // fresh is read twice (sink + sketch); persist so the
-          // probe split and any sliver join run once, not per consumer
-          val fresh = seen.filterNew(batch, history()).persist()
-          try {
-            sink.upsert(fresh, batchId)
-            seen.commit(fresh) // AFTER the sink accepted the rows
-          } finally fresh.unpersist()
-        }
+        val spark = source.sparkSession
+        // The micro-batch is a plan over the source's own scan, so
+        // every action over it would fetch and parse the poll again:
+        // the seen-set's probe, each arm of its sliver union, a
+        // replay's commit. Persisted, they all read the parsed rows.
+        val batch = inSession(micro, spark).persist()
+        try {
+          // Replay guard: a batch whose write landed but whose
+          // checkpoint commit didn't arrives AGAIN, and the dedup
+          // filter would see its own first delivery in the store and
+          // strip the batch to empty — handing the sink an empty
+          // re-upsert that a snapshot-rotating store would apply as
+          // an erasure. Skip the whole body; the sketch re-folds the
+          // keys (idempotent) so a restarted process stays exact.
+          if (sink.alreadyApplied(batchId)) seen.commit(batch)
+          else {
+            // fresh is read by the sink and by the sketch fold, so it
+            // is persisted. It has a partition per page, two when the
+            // sliver union runs; coalesced to the core count, each
+            // stage over it runs one task per core and the fold
+            // merges that many partial sketches.
+            val fresh = seen.filterNew(batch, history())
+              .coalesce(spark.sparkContext.defaultParallelism).persist()
+            try {
+              sink.upsert(fresh, batchId)
+              seen.commit(fresh) // AFTER the sink accepted the rows
+            } finally fresh.unpersist()
+          }
+        } finally batch.unpersist()
       }
       .start()
 

@@ -76,16 +76,11 @@ final class BloomSeenSet(key: String, expectedKeys: Long,
   def filterNew(batch: DataFrame, history: => DataFrame): DataFrame = {
     val k = col(key)
     val sketch = bf.getOrElse {
-      // an EMPTY frame hands back a null-backed sketch from
-      // stat.bloomFilter (nothing aggregated) — probe would NPE;
-      // an explicitly-empty filter is the correct identity
-      val h = history
       // xxhash64, never cast("long"): casting a STRING key yields
       // NULL, which builds an empty sketch and probes definitely-new
       // for every row — the dedup silently fails open and duplicates
       // flow to the sink on every poll
-      val s = if (h.isEmpty) BloomFilter.create(expectedKeys, fpp)
-              else RuntimeFilter.keySketch(h, k, expectedKeys, fpp)
+      val s = RuntimeFilter.keySketch(history, k, expectedKeys, fpp)
       bf = Some(s)
       s
     }
@@ -104,11 +99,10 @@ final class BloomSeenSet(key: String, expectedKeys: Long,
     * against a store that never got it. The save sits INSIDE commit
     * so the durable sketch can never lag the committed key set. */
   def commit(fresh: DataFrame): Unit = {
-    if (!fresh.isEmpty) {
-      val add = RuntimeFilter.keySketch(fresh, col(key), expectedKeys, fpp)
-      bf = Some(bf.fold(add) { b => b.mergeInPlace(add); b })
-    }
-    for (p <- persistPath; s <- bf) save(s, p)
+    val add = RuntimeFilter.keySketch(fresh, col(key), expectedKeys, fpp)
+    val s = bf.fold(add) { b => b.mergeInPlace(add); b }
+    bf = Some(s)
+    persistPath.foreach(save(s, _))
   }
 
   /** Atomic envelope write: tmp + rename, so a crash mid-save leaves

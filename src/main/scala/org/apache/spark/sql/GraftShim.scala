@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Bridge into the `private[sql]` classic Column↔Expression
   * converters — the standard extension-library shim for exposing
@@ -27,6 +29,18 @@ object GraftShim {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `bloom_filter_agg` of the long column `c` — the aggregate
+    * `stat.bloomFilter` runs — and the empty filter that aggregate
+    * starts from: same bit size and hash count as every filter it
+    * builds (both clamped by the runtime bloom-filter confs), so the
+    * two merge. The aggregate's result is null for no input rows. */
+  def bloomFilterAgg(c: Column, expectedItems: Long,
+                     numBits: Long): (Column, () => BloomFilter) = {
+    val agg = new BloomFilterAggregate(expression(c),
+      Literal(expectedItems), Literal(numBits))
+    (column(agg.toAggregateExpression()), () => agg.createAggregationBuffer())
+  }
 
   /** The operator scopes of a stage's RDDs (`Exchange`,
     * `WholeStageCodegen (3)`, ...), upstream first; the scope type is

@@ -108,6 +108,33 @@ class RuntimeFilterSpec extends SparkSpec {
     assert(semi == Set(2L, 6L))
   }
 
+  test("keySketch of an empty frame probes false and merges into a full sketch") {
+    val keys = Seq(1L, 2L, 3L).toDF("k")
+    def hits(bf: BloomFilter): Set[Long] =
+      keys.filter(graft.plans.BloomMightContainLong.probe(xxhash64(col("k")), bf))
+        .as[Long].collect().toSet
+    val none = RuntimeFilter.keySketch(keys.filter(lit(false)), col("k"), 100)
+    val full = RuntimeFilter.keySketch(Seq(1L, 2L).toDF("k"), col("k"), 100)
+    assert(hits(none).isEmpty, "an empty sketch holds no key")
+    assert(none.bitSize == full.bitSize && none.isCompatible(full))
+    none.mergeInPlace(full)
+    assert(hits(none) == Set(1L, 2L))
+  }
+
+  test("bloomPrunedAntiJoin with an empty history returns the batch") {
+    val got = RuntimeFilter.bloomPrunedAntiJoin(Seq(1L, 2L, 3L).toDF("k"), col("k"),
+        Seq.empty[Long].toDF("k2"), col("k2"), expectedKeys = 100L)
+      .as[Long].collect().toSet
+    assert(got == Set(1L, 2L, 3L))
+  }
+
+  test("bloomPrunedSemiJoin with an empty small side returns no rows") {
+    val got = RuntimeFilter.bloomPrunedSemiJoin(Seq(1L, 2L, 3L).toDF("k"), col("k"),
+        Seq.empty[Long].toDF("k2"), col("k2"), expectedKeys = 100L)
+      .as[Long].collect()
+    assert(got.isEmpty)
+  }
+
   test("sketch envelope: roundtrip preserves probes; scheme mismatches are refused") {
     val h = Seq("addr_1", "addr_2", "addr_3").toDF("k")
     val bf = RuntimeFilter.keySketch(h, col("k"), 100)
